@@ -44,12 +44,9 @@ def _index(spark, corpus_df, index_dir: str | None, index_format: str = "parquet
         idx = build_index(corpus_df, text=F.concat_ws(" ", "title", "text"))
         idx.save_bucketed(spark, db)
         return CorpusIndex.load_bucketed(spark, db)
-    from beyond_vector_search_spark.sources import fsutil
-
-    # Hadoop FS probe, not os.path: --index-dir may name an HDFS/S3A
-    # location on a cluster, where a local probe always answers "no
-    # store" and silently rebuilds the index every invocation
-    if index_dir and fsutil.exists(spark, f"{index_dir}/term_stats"):
+    # the committed-snapshot probe (Hadoop FS, so HDFS/S3A roots work):
+    # a partial or crashed save is not ready and gets rebuilt
+    if index_dir and CorpusIndex.snapshot_ready(spark, index_dir):
         return CorpusIndex.load(spark, index_dir)
     idx = build_index(corpus_df, text=F.concat_ws(" ", "title", "text"))
     if index_dir:
@@ -200,9 +197,7 @@ def cmd_evaluate(args) -> dict:
     store = telemetry_from_env(spark, args.db or tempfile.mkdtemp(prefix="bvs_telemetry_"))
 
     state = RouterState.from_json(store.get_state(STATE_KEY, RouterState().to_json()))
-    report, final_state, runs_df = evaluate_all(
-        labels, docs, idx, state=state, k=args.k, fold=args.fold
-    )
+    report, final_state, runs_df = evaluate_all(labels, docs, idx, state=state, k=args.k)
     store.set_state(STATE_KEY, final_state.to_json())
     store.log_runs(runs_df.drop("query_id"))
     return report.to_json()
@@ -476,9 +471,6 @@ def main() -> None:
     pe.add_argument("--db", default=None)
     pe.add_argument("--index-dir", default=None)
     pe.add_argument("--index-format", default="parquet", choices=["parquet", "bucketed"])
-    pe.add_argument("--fold", default="driver", choices=["driver", "windowed"],
-                    help="weight-trajectory fold: sequential driver replay or "
-                         "the distributed window form (identical results)")
 
     pm = sub.add_parser(
         "maintain",

@@ -209,11 +209,7 @@ class CorpusIndex:
     _WAVES = [
         ["postings", "term_stats", "doc_stats", "gram_stats", "scalars", "doc_ids"],
         ["doc_norm"],
-        # gram_tf rides the last wave for serving profiles that cache a
-        # norm-denormalized copy (it joins doc_norm); the plain
-        # checkpointed delta relation is never cached and is skipped by
-        # the is_cached guard below.
-        ["doc_vec", "gram_tf"],
+        ["doc_vec"],
     ]
 
     def materialize(self) -> "CorpusIndex":

@@ -5,9 +5,10 @@ nothing but mutating router weights between queries.  The Spark shape
 (SURVEY.md §3.2): ALL heavy work — 3 strategies × all labels scoring,
 answer generation, hit@k / exact-match — runs as ONE batch dataflow;
 the only sequential piece, the K-row winner->weight trajectory, is
-folded on the driver in label order.  1 query and 10M queries are the
-same plan; only the fold's input (one tiny row per labeled query)
-ever reaches the driver.
+folded on the driver in label order.  The fold is driver-side by
+design: the report it produces (``EvalReport.per_query``) holds one
+row per label, so the labels are driver-sized anyway, and only one
+tiny row per labeled query crosses to the driver.
 """
 
 from __future__ import annotations
@@ -31,47 +32,18 @@ from beyond_vector_search_spark.operators.router import (
 )
 
 HIT_WEIGHT, EM_WEIGHT = 0.7, 0.3  # reference evaluator.py:13-16
+ARMS = ("vector", "keyword", "hybrid")
 
 
-def strategy_eval(
-    top_k: DataFrame | None,
-    documents: DataFrame | None,
-    labels: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    title_col: str | None = "title",
-    text_col: str = "text",
-    cfg: EngineConfig = DEFAULT,
-    answers: DataFrame | None = None,
-) -> DataFrame:
-    """(query_id, hit_at_k, exact_match, total, top_doc_ids) for one
-    strategy's top-k relation (reference evaluator.py:19-40).
-
-    ``answers``: a precomputed :func:`generate_answers` relation for
-    this strategy — when supplied, ``top_k``/``documents`` are unused
-    (may be None) and no answer subtree is built: the hit/EM/total
-    scoring is pure column work over the given rows.  Callers that
-    evaluate several strategies derive all answer relations from ONE
-    tagged-union generate_answers pass and split it per strategy
-    (plans/coverage_queries.q_eval_loop), so the documents join and
-    snippet derivation run once, not once per strategy."""
-    queries = labels.select("query_id", "query")
-    ans = (
-        answers
-        if answers is not None
-        else generate_answers(
-            top_k, documents, queries, id_col=id_col, title_col=title_col, text_col=text_col, cfg=cfg
-        )
-    )
-    j = ans.join(
-        labels.select("query_id", "expected_doc_id", "expected_answer"), "query_id"
-    )
+def _scored(joined: DataFrame, *keys: str) -> DataFrame:
+    """hit@k / exact match / weighted total over answers joined to
+    their labels (reference evaluator.py:19-40)."""
     hit = F.when(
         F.array_contains("top_doc_ids", F.col("expected_doc_id").cast("string")), 1.0
     ).otherwise(0.0)
     em = F.when(norm_answer("answer") == norm_answer("expected_answer"), 1.0).otherwise(0.0)
-    return j.select(
-        "query_id",
+    return joined.select(
+        *keys,
         hit.alias("hit_at_k"),
         em.alias("exact_match"),
         (HIT_WEIGHT * hit + EM_WEIGHT * em).alias("total"),
@@ -79,20 +51,51 @@ def strategy_eval(
     )
 
 
+def strategy_eval(
+    top_k: DataFrame,
+    documents: DataFrame,
+    labels: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    title_col: str | None = "title",
+    text_col: str = "text",
+    cfg: EngineConfig = DEFAULT,
+) -> DataFrame:
+    """(query_id, hit_at_k, exact_match, total, top_doc_ids) for one
+    strategy's top-k relation — the single-strategy definition that
+    :func:`strategy_eval_tagged` computes for all strategies at once."""
+    ans = generate_answers(
+        top_k, documents, labels.select("query_id", "query"),
+        id_col=id_col, title_col=title_col, text_col=text_col, cfg=cfg,
+    )
+    return _scored(
+        ans.join(labels.select("query_id", "expected_doc_id", "expected_answer"), "query_id"),
+        "query_id",
+    )
+
+
+def tag_union(parts: dict[str, DataFrame], *cols: str) -> DataFrame:
+    """Union per-strategy relations into one, keyed by a composite
+    ``"{tag}|{query_id}"`` id (``cols`` ride along unchanged).  One
+    :func:`generate_answers` pass over the tagged union of the top-k
+    relations and of the queries answers every strategy at once;
+    :func:`strategy_eval_tagged` splits the key back apart."""
+    out = None
+    for tag, df in parts.items():
+        part = df.select(F.concat(F.lit(tag + "|"), F.col("query_id")).alias("query_id"), *cols)
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
 def strategy_eval_tagged(
     answers_tagged: DataFrame, labels: DataFrame, tags: tuple[str, ...]
 ) -> DataFrame:
     """All strategies' eval metrics in ONE relation: ``answers_tagged``
-    is a tagged-union :func:`generate_answers` output whose query_id
-    carries a ``"{tag}|{query_id}"`` composite key (the
-    plans/coverage_queries.q_eval_loop answer pass).  Splits the
-    composite, keeps only ``tags`` rows, and scores hit/EM/total with
-    the exact :func:`strategy_eval` expressions over one labels join —
-    so evaluating three strategies costs one join and zero per-strategy
-    relations (the r10 shape paid three joins whose cached-read +
-    broadcast-build AQE stages dominated the merged collect's job
-    count).  Returns (tag, query_id, hit_at_k, exact_match, total,
-    top_doc_ids)."""
+    is a :func:`generate_answers` output over :func:`tag_union` inputs.
+    Splits the composite key, keeps only ``tags`` rows, and scores them
+    with the :func:`strategy_eval` expressions over ONE labels join
+    instead of one join per strategy.  Returns (tag, query_id,
+    hit_at_k, exact_match, total, top_doc_ids)."""
     split = answers_tagged.select(
         F.substring_index("query_id", "|", 1).alias("tag"),
         F.expr("substring(query_id, instr(query_id, '|') + 1)").alias("query_id"),
@@ -102,142 +105,7 @@ def strategy_eval_tagged(
     j = split.join(
         labels.select("query_id", "expected_doc_id", "expected_answer"), "query_id"
     )
-    hit = F.when(
-        F.array_contains("top_doc_ids", F.col("expected_doc_id").cast("string")), 1.0
-    ).otherwise(0.0)
-    em = F.when(norm_answer("answer") == norm_answer("expected_answer"), 1.0).otherwise(0.0)
-    return j.select(
-        "tag",
-        "query_id",
-        hit.alias("hit_at_k"),
-        em.alias("exact_match"),
-        (HIT_WEIGHT * hit + EM_WEIGHT * em).alias("total"),
-        "top_doc_ids",
-    )
-
-
-def fold_weights_windowed(
-    merged: DataFrame, state: RouterState, *, n_chunks: int = 32
-) -> DataFrame:
-    """The eval feedback fold (reference evaluate.py:59-69 +
-    router.py:120-164) as COLUMN EXPRESSIONS — no driver loop.
-
-    Key fact making this exact: ``update_from_scores`` deltas depend
-    only on that row's three eval scores, never on the current weights
-    (winner is argmax of scores; winner +lr, each loser −lr/2; all-tied
-    → no-op).  So the weights query i routes with are
-
-        w0 + Σ deltas of rows < i   (prefix sum in query_id order)
-
-    and the routing choice at row i is the same CASE chain as
-    :func:`router.route` applied to (heuristics + those prefix weights).
-    The winner's argmax tie-break "alphabetical by name" is exactly the
-    hybrid ≥ keyword ≥ vector precedence chain (hybrid < keyword <
-    vector alphabetically).
-
-    Two scale/exactness properties:
-
-    1. **No unpartitioned window.**  The prefix sum is a chunked
-       two-pass scheme: rows are range-partitioned by query_id into
-       ``n_chunks`` ordered chunks; per-chunk partial sums (one tiny row
-       per chunk) are collected and turned into exclusive per-chunk
-       offsets; the within-chunk prefix runs under a window PARTITIONED
-       by chunk.  No stage funnels all label rows through one partition
-       — 10M labels fold as 10M/n_chunks-row windows.
-
-    2. **Associativity-free arithmetic.**  Deltas are accumulated as
-       INTEGER multiples of lr/2 (winner +2 units, each loser −1,
-       all-tied 0); integer sums are exact in any order, and each weight
-       is one multiply `w0 + units * (lr/2)`.  Distributed grouping can
-       therefore never drift from the sequential driver fold by an ulp,
-       even for lr values with no exact binary representation (the
-       driver fold in :func:`evaluate_all` uses the same closed form).
-
-    Adds: winner, d_vector/d_keyword/d_hybrid (this row's float deltas),
-    w_vector/w_keyword/w_hybrid (weights BEFORE this row),
-    wafter_vector/... (weights AFTER this row, closed-form), chosen,
-    chosen_score.
-    """
-    from pyspark.sql import Window
-
-    s = {"vector": F.col("s_vec"), "keyword": F.col("s_key"), "hybrid": F.col("s_hyb")}
-    winner = (
-        F.when((s["hybrid"] >= s["keyword"]) & (s["hybrid"] >= s["vector"]), "hybrid")
-        .when(s["keyword"] >= s["vector"], "keyword")
-        .otherwise("vector")
-    )
-    all_eq = (s["vector"] == s["keyword"]) & (s["keyword"] == s["hybrid"])
-    df = merged.withColumn("winner", winner)
-    half_lr = state.lr / 2.0
-    for name in ("vector", "keyword", "hybrid"):
-        units = F.when(all_eq, F.lit(0)).otherwise(
-            F.when(F.col("winner") == name, F.lit(2)).otherwise(F.lit(-1))
-        )
-        df = df.withColumn(f"m_{name}", units.cast("long"))
-        df = df.withColumn(f"d_{name}", F.col(f"m_{name}") * F.lit(half_lr))
-
-    # ---- chunked two-pass exclusive prefix sum over the unit columns ----
-    # Range partitioning keeps chunk c's keys strictly before chunk
-    # c+1's, so (per-chunk offset) + (within-chunk prefix) == global
-    # prefix.  Cached so both passes see identical partition ids.
-    chunked = df.repartitionByRange(n_chunks, F.asc("query_id")).withColumn(
-        "_chunk", F.spark_partition_id()
-    )
-    chunked.persist()
-    partials = (
-        chunked.groupBy("_chunk")
-        .agg(*[F.sum(f"m_{n}").alias(f"pm_{n}") for n in ("vector", "keyword", "hybrid")])
-        .collect()
-    )
-    offsets: dict[int, tuple[int, int, int]] = {}
-    run = {"vector": 0, "keyword": 0, "hybrid": 0}
-    for p in sorted(partials, key=lambda r: r["_chunk"]):
-        offsets[p["_chunk"]] = (run["vector"], run["keyword"], run["hybrid"])
-        for n in ("vector", "keyword", "hybrid"):
-            run[n] += int(p[f"pm_{n}"] or 0)
-    spark = merged.sparkSession
-    off_df = spark.createDataFrame(
-        [(c, *o) for c, o in offsets.items()],
-        "_chunk INT, off_vector LONG, off_keyword LONG, off_hybrid LONG",
-    )
-    df = chunked.join(F.broadcast(off_df), "_chunk")
-
-    within = (
-        Window.partitionBy("_chunk")
-        .orderBy("query_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w0 = {
-        "vector": state.weight_vector,
-        "keyword": state.weight_keyword,
-        "hybrid": state.weight_hybrid,
-    }
-    for name in ("vector", "keyword", "hybrid"):
-        units_before = F.col(f"off_{name}") + F.coalesce(
-            F.sum(f"m_{name}").over(within), F.lit(0)
-        )
-        df = df.withColumn(
-            f"w_{name}", F.lit(w0[name]) + units_before * F.lit(half_lr)
-        ).withColumn(
-            f"wafter_{name}",
-            F.lit(w0[name]) + (units_before + F.col(f"m_{name}")) * F.lit(half_lr),
-        )
-    df = df.drop("_chunk", "off_vector", "off_keyword", "off_hybrid")
-    sk = F.col("heuristic_keyword") + F.col("w_keyword")
-    sv = F.col("heuristic_vector") + F.col("w_vector")
-    sh = F.col("heuristic_hybrid") + F.col("w_hybrid")
-    chosen = (
-        F.when((sh >= sk) & (sh >= sv), "hybrid")
-        .when(sk >= sv, "keyword")
-        .otherwise("vector")
-    )
-    df = df.withColumn("chosen", chosen)
-    return df.withColumn(
-        "chosen_score",
-        F.when(F.col("chosen") == "vector", s["vector"])
-        .when(F.col("chosen") == "keyword", s["keyword"])
-        .otherwise(s["hybrid"]),
-    )
+    return _scored(j, "tag", "query_id")
 
 
 @dataclass
@@ -256,6 +124,58 @@ class EvalReport:
         }
 
 
+def _fold(rows: list[dict], state: RouterState) -> tuple[list[dict], RouterState]:
+    """The ordered feedback fold (reference evaluate.py:59-69 +
+    router.py:120-164) over per-query score rows in query_id order:
+    route each row with the weights so far, then apply its bandit
+    update.  Returns (per_query, final_state).
+
+    Weights accumulate as INTEGER multiples of lr/2
+    (:func:`router.delta_units`) with ONE multiply per step
+    (w0 + units*(lr/2)), so no rounding error builds up along the
+    trajectory for any lr; for the reference lr=0.25 this is also
+    bit-identical to the reference's sequential float adds (all
+    quantities are exact powers of two)."""
+    w0 = (state.weight_vector, state.weight_keyword, state.weight_hybrid)
+    half_lr = state.lr / 2.0
+    units = {"vector": 0, "keyword": 0, "hybrid": 0}
+    per_query: list[dict] = []
+    for d in rows:
+        chosen = choose_with_state(d, state)
+        scores = {"vector": d["s_vec"], "keyword": d["s_key"], "hybrid": d["s_hyb"]}
+        for name, m in delta_units(scores).items():
+            units[name] += m
+        state = RouterState(
+            weight_vector=w0[0] + units["vector"] * half_lr,
+            weight_keyword=w0[1] + units["keyword"] * half_lr,
+            weight_hybrid=w0[2] + units["hybrid"] * half_lr,
+            lr=state.lr,
+        )
+        per_query.append(
+            {
+                "query_id": d["query_id"],
+                "query": d["query"],
+                "chosen": chosen,
+                "chosen_score": scores[chosen],
+                "vector_score": d["s_vec"],
+                "keyword_score": d["s_key"],
+                "hybrid_score": d["s_hyb"],
+            }
+        )
+    return per_query, state
+
+
+# the collected fold rows' telemetry columns, rebuilt driver-side into
+# runs_df (query_id as the labels carry it; feature and arm columns as
+# router.query_features / strategy_eval_tagged produce them)
+_RUNS_SCHEMA = (
+    "query STRING, strategy STRING, score DOUBLE, query_id STRING, "
+    "n_tokens INT, digit_ratio DOUBLE, oov_ratio DOUBLE, rare_ratio DOUBLE, "
+    "s_vec DOUBLE, ids_vec ARRAY<STRING>, s_key DOUBLE, ids_key ARRAY<STRING>, "
+    "s_hyb DOUBLE, ids_hyb ARRAY<STRING>"
+)
+
+
 def evaluate_all(
     labels: DataFrame,
     documents: DataFrame,
@@ -268,9 +188,7 @@ def evaluate_all(
     cfg: EngineConfig = DEFAULT,
     k: int | None = None,
     tops: dict[str, DataFrame] | None = None,
-    evals: dict[str, DataFrame] | None = None,
     evals_tagged: DataFrame | None = None,
-    fold: str = "driver",
     with_runs: bool = True,
 ) -> tuple[EvalReport, RouterState, DataFrame]:
     """Run the full evaluation; returns (report, final_state, runs_df).
@@ -280,21 +198,14 @@ def evaluate_all(
     the feedback fold = ascending query_id (the labels file is ordered
     Q-001.. so file order == query_id order).
 
-    Pass precomputed ``tops`` ({strategy: top-k DataFrame}) to reuse
-    cached score relations across callers, or precomputed ``evals``
-    ({strategy: strategy_eval output}) to skip the answer/hit/EM
-    derivation entirely.  ``evals_tagged`` is the cheapest form: ONE
-    :func:`strategy_eval_tagged` relation for all strategies, pivoted
-    into the arm columns here — one aggregation + one join instead of
-    three per-strategy joins (plans/coverage_queries.q_eval_loop).
-
-    ``fold="driver"`` replays the weight trajectory as a sequential
-    driver fold (the reference semantics, one tiny row per label);
-    ``fold="windowed"`` computes the identical trajectory as window
-    expressions (:func:`fold_weights_windowed`) — the fully
-    distributed form for label sets too large to fold on the driver.
-    Both produce bit-identical reports (pinned by
-    tests/test_eval_parity.py).
+    The three strategies' top-k relations (``tops``, {strategy: top-k
+    DataFrame}, e.g. cached :class:`operators.serving.ServingArms`
+    relations; default :func:`retrieval.search_all`) are answered in
+    ONE :func:`generate_answers` pass over their :func:`tag_union` and
+    scored by :func:`strategy_eval_tagged`.  A caller that already holds
+    that scored relation passes it as ``evals_tagged`` instead
+    (plans/coverage_queries.q_eval_loop).  ``with_runs=False`` skips
+    building ``runs_df`` (returned as None).
     """
     state = state or RouterState()
     k = k if k is not None else cfg.k
@@ -302,127 +213,61 @@ def evaluate_all(
 
     feats = heuristic_columns(query_features(queries, index.term_stats))
 
-    # One tiny row per query: all three arms' scores + routing heuristics.
-    if evals_tagged is not None:
-        # single tagged relation (strategy_eval_tagged): pivot the tag
-        # into the three arm columns — ONE aggregation + ONE join
-        # instead of three per-strategy joins (each of which paid its
-        # own cached-read + broadcast-build AQE stages in the collect)
-        short = {"vector": "vec", "keyword": "key", "hybrid": "hyb"}
-        wide = (
-            evals_tagged.groupBy("query_id")
-            .pivot("tag", list(short))
-            .agg(F.first("total").alias("s"), F.first("top_doc_ids").alias("ids"))
+    if evals_tagged is None:
+        tops = tops or search_all(queries, index, k=k, cfg=cfg)
+        answers = generate_answers(
+            tag_union(tops, "doc_id", "rank"),
+            documents,
+            tag_union({s: queries for s in ARMS}, "query"),
+            id_col=id_col, title_col=title_col, text_col=text_col, cfg=cfg,
         )
-        for name, sh in short.items():
-            wide = wide.withColumnRenamed(f"{name}_s", f"s_{sh}").withColumnRenamed(
-                f"{name}_ids", f"ids_{sh}"
-            )
-        # preserve the legacy per-strategy INNER-join semantics: a query
-        # missing one strategy's tagged row pivots to NULL arm columns,
-        # and the driver fold below would crash on `total += None` —
-        # drop such queries instead, exactly as the three inner joins
-        # did (the in-repo caller always supplies all three tags; this
-        # guards the public-API path)
-        merged = feats.join(wide, "query_id").where(
-            F.col("s_vec").isNotNull()
-            & F.col("s_key").isNotNull()
-            & F.col("s_hyb").isNotNull()
+        evals_tagged = strategy_eval_tagged(answers, labels, ARMS)
+    # One tiny row per query: all three arms' scores + routing
+    # heuristics, the tag pivoted into the arm columns (one aggregation
+    # + one join).
+    short = {"vector": "vec", "keyword": "key", "hybrid": "hyb"}
+    wide = (
+        evals_tagged.groupBy("query_id")
+        .pivot("tag", list(short))
+        .agg(F.first("total").alias("s"), F.first("top_doc_ids").alias("ids"))
+    )
+    for name, sh in short.items():
+        wide = wide.withColumnRenamed(f"{name}_s", f"s_{sh}").withColumnRenamed(
+            f"{name}_ids", f"ids_{sh}"
         )
-    else:
-        if evals is None:
-            tops = tops or search_all(queries, index, k=k, cfg=cfg)
-            evals = {
-                s: strategy_eval(
-                    tops[s], documents, labels,
-                    id_col=id_col, title_col=title_col, text_col=text_col, cfg=cfg,
-                )
-                for s in ("vector", "keyword", "hybrid")
-            }
-        merged = (
-            feats.join(evals["vector"].select("query_id", F.col("total").alias("s_vec"), F.col("top_doc_ids").alias("ids_vec")), "query_id")
-            .join(evals["keyword"].select("query_id", F.col("total").alias("s_key"), F.col("top_doc_ids").alias("ids_key")), "query_id")
-            .join(evals["hybrid"].select("query_id", F.col("total").alias("s_hyb"), F.col("top_doc_ids").alias("ids_hyb")), "query_id")
-        )
-    if fold == "windowed":
-        # trajectory computed engine-side; the collect returns RESULTS
-        # (chosen arm + weights), not a sequential dependency
-        rows = fold_weights_windowed(merged, state).collect()
-    else:
-        rows = merged.collect()
+    # a query missing one strategy's row pivots to NULL arm columns,
+    # which the fold cannot score: drop it, as an inner join per
+    # strategy would
+    merged = feats.join(wide, "query_id").where(
+        F.col("s_vec").isNotNull() & F.col("s_key").isNotNull() & F.col("s_hyb").isNotNull()
+    )
     # Sort on the DRIVER, not with a plan-level orderBy: the rows are
     # already driver-sized (that's what collect means), and a global
     # sort plans a rangepartitioning exchange plus its sampling job per
     # call.  Python's str sort compares code points == UTF8 byte order,
     # so the fold order is identical to Spark's ORDER BY query_id.
-    rows = sorted(rows, key=lambda r: r["query_id"])
-
-    per_query: list[dict] = []
-    run_rows: list[tuple] = []
-    total = 0.0
-    # Driver fold accumulates INTEGER multiples of lr/2 and applies ONE
-    # multiply per step (w0 + units*(lr/2)) — the same closed form the
-    # windowed fold computes, so the two folds agree bit-for-bit for
-    # every lr, not just binary-representable ones.  For the reference
-    # lr=0.25 this is also bit-identical to the reference's sequential
-    # float adds (all quantities are exact powers of two).
-    w0 = (state.weight_vector, state.weight_keyword, state.weight_hybrid)
-    half_lr = state.lr / 2.0
-    units = {"vector": 0, "keyword": 0, "hybrid": 0}
-    for r in rows:
-        d = r.asDict()
-        if fold == "windowed":
-            chosen = d["chosen"]
-            chosen_score = d["chosen_score"]
-            total += chosen_score
-            state = RouterState(
-                weight_vector=d["wafter_vector"],
-                weight_keyword=d["wafter_keyword"],
-                weight_hybrid=d["wafter_hybrid"],
-                lr=state.lr,
-            )
-        else:
-            chosen = choose_with_state(d, state)
-            scores = {"vector": d["s_vec"], "keyword": d["s_key"], "hybrid": d["s_hyb"]}
-            chosen_score = scores[chosen]
-            total += chosen_score
-            for name, m in delta_units(scores).items():
-                units[name] += m
-            state = RouterState(
-                weight_vector=w0[0] + units["vector"] * half_lr,
-                weight_keyword=w0[1] + units["keyword"] * half_lr,
-                weight_hybrid=w0[2] + units["hybrid"] * half_lr,
-                lr=state.lr,
-            )
-        per_query.append(
-            {
-                "query_id": d["query_id"],
-                "query": d["query"],
-                "chosen": chosen,
-                "chosen_score": chosen_score,
-                "vector_score": d["s_vec"],
-                "keyword_score": d["s_key"],
-                "hybrid_score": d["s_hyb"],
-            }
-        )
-        run_rows.append((d["query"], chosen, chosen_score, d["query_id"]))
+    rows = sorted((r.asDict() for r in merged.collect()), key=lambda d: d["query_id"])
+    per_query, state = _fold(rows, state)
 
     n = len(rows)
     report = EvalReport(
-        mean_score=total / max(1, n),
+        mean_score=sum(q["chosen_score"] for q in per_query) / max(1, n),
         n=n,
         router_state=state.to_json(),
         per_query=per_query,
     )
     if not with_runs:
-        # callers that discard the telemetry relation (the memoized
-        # catalog loop) skip its whole plan construction — a
-        # createDataFrame + join + to_json tree built per call only to
-        # be garbage-collected (~0.5 s of driver time at 14 labels)
         return report, state, None
-    spark = labels.sparkSession
-    chosen_df = spark.createDataFrame(
-        run_rows, "query STRING, strategy STRING, score DOUBLE, query_id STRING"
+    # runs_df from the rows the fold already collected: a local relation,
+    # so writing it re-executes none of the scoring plan
+    chosen_df = labels.sparkSession.createDataFrame(
+        [
+            (q["query"], q["chosen"], q["chosen_score"], q["query_id"],
+             *(d[c] for c in ("n_tokens", "digit_ratio", "oov_ratio", "rare_ratio",
+                              "s_vec", "ids_vec", "s_key", "ids_key", "s_hyb", "ids_hyb")))
+            for q, d in zip(per_query, rows)
+        ],
+        _RUNS_SCHEMA,
     )
     # Rich telemetry meta (reference evaluate.py:71-100) built JVM-side
     # with to_json(struct(...)) — features, per-arm scores, top doc ids.
@@ -438,15 +283,7 @@ def evaluate_all(
             F.struct(F.col("s_hyb").alias("score_total"), F.col("ids_hyb").alias("top_doc_ids")).alias("hybrid"),
         )
     )
-    runs_df = (
-        chosen_df.join(merged, ["query_id", "query"])
-        .select(
-            "query",
-            "strategy",
-            "score",
-            "query_id",
-            meta.alias("meta_json"),
-        )
-        .withColumn("ts_unix", F.unix_timestamp(F.current_timestamp()).cast("double"))
-    )
+    runs_df = chosen_df.select(
+        "query", "strategy", "score", "query_id", meta.alias("meta_json")
+    ).withColumn("ts_unix", F.unix_timestamp(F.current_timestamp()).cast("double"))
     return report, state, runs_df

@@ -652,53 +652,23 @@ def compiled_vector_scores(
         gram_tf = getattr(index, "gram_tf", None)
         if gram_tf is not None:
             contrib = F.col("q.qw") * ((1.0 + F.log("tf")) * F.col("q.idf"))
-            if "norm" in gram_tf.columns:
-                # serving profile: the doc L2 norm is denormalized onto
-                # the gram_tf cache (same pattern as doc_vec) — the
-                # whole arm is filter -> explode -> one aggregation,
-                # no join, no broadcast build.
-                pairs = gram_tf.where(F.col("gram").isin(grams)).select(
-                    "doc_id",
-                    "tf",
-                    "norm",
-                    F.explode(F.element_at(gmap, F.col("gram"))).alias("q"),
+            pairs = gram_tf.where(F.col("gram").isin(grams)).select(
+                "doc_id", "tf", F.explode(F.element_at(gmap, F.col("gram"))).alias("q")
+            )
+            dots = (
+                pairs.select(
+                    F.col("q.query_id").alias("query_id"), "doc_id", contrib.alias("contrib")
                 )
-                scored = (
-                    pairs.select(
-                        F.col("q.query_id").alias("query_id"),
-                        "doc_id",
-                        contrib.alias("contrib"),
-                        "norm",
-                    )
-                    .groupBy("query_id", "doc_id")
-                    .agg(F.sum("contrib").alias("dot"), F.first("norm").alias("norm"))
-                    .select(
-                        "query_id",
-                        "doc_id",
-                        (
-                            F.col("dot")
-                            / (F.element_at(nmap, F.col("query_id")) * F.col("norm"))
-                        ).alias("score"),
-                    )
-                )
-            else:
-                pairs = gram_tf.where(F.col("gram").isin(grams)).select(
-                    "doc_id", "tf", F.explode(F.element_at(gmap, F.col("gram"))).alias("q")
-                )
-                dots = (
-                    pairs.select(
-                        F.col("q.query_id").alias("query_id"), "doc_id", contrib.alias("contrib")
-                    )
-                    .groupBy("query_id", "doc_id")
-                    .agg(F.sum("contrib").alias("dot"))
-                )
-                scored = dots.join(index.doc_norm, "doc_id").select(
-                    "query_id",
-                    "doc_id",
-                    (F.col("dot") / (F.element_at(nmap, F.col("query_id")) * F.col("norm"))).alias(
-                        "score"
-                    ),
-                )
+                .groupBy("query_id", "doc_id")
+                .agg(F.sum("contrib").alias("dot"))
+            )
+            scored = dots.join(index.doc_norm, "doc_id").select(
+                "query_id",
+                "doc_id",
+                (F.col("dot") / (F.element_at(nmap, F.col("query_id")) * F.col("norm"))).alias(
+                    "score"
+                ),
+            )
         else:
             pairs = index.doc_vec.where(F.col("gram").isin(grams)).select(
                 "doc_id",

@@ -162,10 +162,11 @@ def delta_units(scores: dict[str, float]) -> dict[str, int]:
     (reference router.py:120-164 with 3 arms: winner +lr == +2 units,
     each of the 2 losers −lr/2 == −1 unit; all-tied → all 0).
 
-    Integer units make distributed accumulation associativity-free: the
-    windowed fold (evaluate.fold_weights_windowed) sums units in any
-    grouping and multiplies once, and the driver fold does the same, so
-    the two can never drift by an ulp for any lr value."""
+    Integer units make accumulation associativity-free: the eval fold
+    (evaluate._fold) and the DuckDB oracle's prefix sum
+    (plans/coverage_queries._EVAL_LOOP_SQL) sum units in their own
+    order and multiply once, so the two can never drift by an ulp for
+    any lr value."""
     if not scores:
         return {}
     vals = list(scores.values())

@@ -39,13 +39,13 @@ class ServingArms:
     """Lazily-built, cached arm score relations for one query batch.
 
     ``queries``: a (query_id, query) DataFrame or a list of
-    (query_id, query) tuples.  ``compiled=True`` (default) resolves the
-    batch against the index once and scores via the scan-prunable
-    literal-fold path (:func:`retrieval.compile_query_batch`); batches
-    the compiled path rejects — non-string ids, or more distinct
-    features than ``max_features`` — fall back to the join-form
-    scorers automatically (the bulk regime, where broadcasting the
-    query side is the right plan anyway).
+    (query_id, query) tuples.  The batch is resolved against the index
+    once and scored via the scan-prunable literal-fold path
+    (:func:`retrieval.compile_query_batch`); batches the compiled path
+    rejects — non-string ids, or more distinct features than
+    ``max_features`` — fall back to the join-form scorers
+    automatically (the bulk regime, where broadcasting the query side
+    is the right plan anyway).
 
     Each arm builds on FIRST ACCESS and is ``.cache()``-ed (lazily —
     no job runs until a consumer acts); ``hybrid`` blends the two
@@ -67,13 +67,9 @@ class ServingArms:
         queries,
         *,
         cfg: EngineConfig = DEFAULT,
-        compiled: bool = True,
-        cache: bool = True,
     ) -> None:
         self.index = index
         self.cfg = cfg
-        self._want_compiled = compiled
-        self._cache = cache
         if isinstance(queries, DataFrame):
             self._queries_df: DataFrame | None = queries
             self._rows: list[tuple] | None = None
@@ -83,9 +79,9 @@ class ServingArms:
         if self._rows is not None:
             # duplicate ids are a CALLER bug on EVERY path: the compiled
             # path raises DuplicateQueryIdError inside compile, but the
-            # join-form fallback (compiled=False, or a rejected batch)
-            # would silently SUM the duplicates' contributions into
-            # doubled scores — fail loudly here instead
+            # join-form fallback (a rejected batch) would silently SUM
+            # the duplicates' contributions into doubled scores — fail
+            # loudly here instead
             ids = [qid for qid, _ in self._rows]
             if len(set(ids)) != len(ids):
                 raise rt.DuplicateQueryIdError(
@@ -110,20 +106,17 @@ class ServingArms:
         """The compiled batch, or False when the batch is not
         compilable (falls back to the join form)."""
         if self._batch is None:
-            if not self._want_compiled:
+            src = self._rows if self._rows is not None else self._queries_df
+            try:
+                self._batch = rt.compile_query_batch(src, self.index, cfg=self.cfg)
+            except rt.DuplicateQueryIdError:
+                # caller bug, not a regime: the join form would
+                # silently emit duplicated score rows — fail loudly
+                raise
+            except ValueError:
+                # non-string ids or feature count over max_features:
+                # the documented bulk regime — join-form scorers
                 self._batch = False
-            else:
-                src = self._rows if self._rows is not None else self._queries_df
-                try:
-                    self._batch = rt.compile_query_batch(src, self.index, cfg=self.cfg)
-                except rt.DuplicateQueryIdError:
-                    # caller bug, not a regime: the join form would
-                    # silently emit duplicated score rows — fail loudly
-                    raise
-                except ValueError:
-                    # non-string ids or feature count over max_features:
-                    # the documented bulk regime — join-form scorers
-                    self._batch = False
         return self._batch
 
     def _assert_unique_df_ids(self) -> None:
@@ -161,10 +154,6 @@ class ServingArms:
                     cfg=self.cfg,
                     keyword=self.arm("keyword"),
                     vector=self.arm("vector"),
-                    # cached arms: the two-pass agg min-max re-reads
-                    # cached rows; uncached arms: window form so each
-                    # arm plan executes once
-                    minmax_via="agg" if self._cache else "window",
                 )
             else:
                 batch = self._compiled_batch()
@@ -181,7 +170,7 @@ class ServingArms:
                     self._assert_unique_df_ids()
                     scorer = rt.bm25_scores if name == "keyword" else rt.vector_scores
                     df = scorer(self.queries_df(), self.index, cfg=self.cfg)
-            self._arms[name] = df.cache() if self._cache else df
+            self._arms[name] = df.cache()
         return self._arms[name]
 
     def as_dict(self, *names: str) -> dict[str, DataFrame]:
@@ -215,16 +204,9 @@ class ServingArms:
         later consumers serve entirely from cache — the explicit
         'index warm-up' step of a serving deployment.  Arm fills run as
         CONCURRENT jobs (they share the executor pool; measured at
-        sf0.1 the pair fills in ~0.4 s wall vs ~1.4 s sequentially).
-
-        With ``cache=False`` there is nothing to warm — the count jobs
-        would execute the arm plans and throw the rows away, and every
-        later consumer would still re-execute from scratch — so this is
-        a documented no-op in that configuration."""
+        sf0.1 the pair fills in ~0.4 s wall vs ~1.4 s sequentially)."""
         import concurrent.futures as cf
 
-        if not self._cache:
-            return self
         arms = [self.arm(n) for n in names or ("keyword", "vector")]
         with cf.ThreadPoolExecutor(max_workers=max(1, len(arms))) as ex:
             list(ex.map(lambda df: df.count(), arms))
@@ -232,9 +214,8 @@ class ServingArms:
 
     def release(self) -> None:
         """Unpersist every cached arm (idempotent)."""
-        if self._cache:
-            for df in self._arms.values():
-                df.unpersist()
+        for df in self._arms.values():
+            df.unpersist()
         self._arms.clear()
 
     def __enter__(self) -> "ServingArms":

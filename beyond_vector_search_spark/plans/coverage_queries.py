@@ -455,9 +455,8 @@ def q_routing_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # query.  The fold is oracle-able because update_from_scores deltas
 # depend only on each row's three eval totals, never on the running
 # weights (router.delta_units): the weight trajectory is an EXCLUSIVE
-# PREFIX SUM of integer units in query_id order, exactly the closed
-# form evaluate.fold_weights_windowed computes engine-side (and the
-# driver fold replays — pinned bit-equal by tests/test_eval_parity.py).
+# PREFIX SUM of integer units in query_id order, the closed form the
+# driver fold (evaluate._fold) accumulates.
 # Arm relations are AS MATERIALIZED (each feeds top-1/top-5/bounds;
 # DuckDB would otherwise re-derive the whole index stack per reference
 # — see the mmr oracle note).  Ranking mirrors retrieval.stable_topk
@@ -564,11 +563,12 @@ def q_eval_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     router-weight fold runs end-to-end.  The sequential fold IS
     oracle-able: deltas are score-only (router.delta_units), so the
     trajectory is an exclusive prefix sum — _EVAL_LOOP_SQL computes it
-    with DuckDB window functions, the same closed form as
-    evaluate.fold_weights_windowed."""
+    with DuckDB window functions, the same closed form the driver fold
+    (evaluate._fold) accumulates."""
     from beyond_vector_search_spark.operators.evaluate import (
         evaluate_all,
         strategy_eval_tagged,
+        tag_union,
     )
 
     _EVAL_LOOP_CACHE = session_memo(spark)
@@ -596,28 +596,19 @@ def q_eval_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # answer, and its rank-sorted top_doc_ids[1] IS the expected doc.
     qdf = _queries_df(spark)
     tags = ("keyword", "vector", "hybrid")
-
-    def tag_qid(tag: str):
-        return F.concat(F.lit(tag + "|"), F.col("query_id")).alias("query_id")
-
-    union_scores = None
-    for tag in tags:
-        part = _scores(spark, sf_dir, tag).select(tag_qid(tag), "doc_id", "score")
-        union_scores = part if union_scores is None else union_scores.unionByName(part)
-    union_topk = stable_topk(union_scores, 5)
-    queries4 = None
-    for tag in tags:
-        part = qdf.select(tag_qid(tag), "query")
-        queries4 = part if queries4 is None else queries4.unionByName(part)
+    union_topk = stable_topk(
+        tag_union({t: _scores(spark, sf_dir, t) for t in tags}, "doc_id", "score"), 5
+    )
+    queries4 = tag_union({t: qdf for t in tags}, "query")
     # Everything from here to the fold collect runs label-sized plans
     # (one row per query) over already-cached relations.  AQE turns
     # every exchange in those plans into its own stage-materialization
     # job — measured 22 first-call jobs, all scheduler overhead at this
     # grain — so the loop's execution scope runs with AQE off: the same
-    # tiny plans execute as ~3 conventional multi-stage jobs.  The
-    # generic evaluate_all path (10M-label windowed folds) keeps the
-    # session's AQE; this is an entry-level choice for the driver-sized
-    # loop only.  The conf is restored even on error.
+    # tiny plans execute as ~3 conventional multi-stage jobs.  A direct
+    # evaluate_all call keeps the session's AQE; this is an entry-level
+    # choice for the catalog loop only.  The conf is restored even on
+    # error.
     # NOTE the toggle is session-global: a concurrent query in the same
     # session during this scope would silently run without AQE.  The
     # loop is a driver-catalog entry (single-threaded correctness /

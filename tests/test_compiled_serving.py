@@ -234,37 +234,6 @@ def test_minmax_window_form_matches_agg_form(spark, docs_index, qdf):
         assert math.isclose(via_win[k], v, rel_tol=TOL, abs_tol=1e-12)
 
 
-def test_compiled_vector_norm_denormalized_gram_tf_profile(spark, docs_index, qdf):
-    """The serving profile CorpusIndex._WAVES documents: a gram_tf cache
-    carrying the doc L2 norm (doc_norm joined once at cache-build time)
-    scores as filter -> explode -> one aggregation with ZERO joins —
-    and must be score-identical to the plain gram_tf path.  Pins the
-    'norm' branch of compiled_vector_scores, which no default build
-    exercises."""
-    import dataclasses
-
-    compiled = rt.compile_query_batch(QUERIES, docs_index, cfg=MATCHED)
-    # the profile: norm joined ONCE at cache-build time, then cached —
-    # scoring reads the cache with no join of its own
-    cache = docs_index.gram_tf.join(docs_index.doc_norm, "doc_id").cache()
-    cache.count()
-    try:
-        denorm = dataclasses.replace(docs_index, gram_tf=cache)
-        got = _as_dict(rt.compiled_vector_scores(denorm, compiled, cfg=MATCHED))
-        want = _as_dict(rt.compiled_vector_scores(docs_index, compiled, cfg=MATCHED))
-        _assert_close(got, want)
-        # the scoring reads the cached profile (its own work is
-        # filter -> explode -> aggregate; the join in the plan string
-        # is the CACHE's stored build lineage, paid once at fill)
-        plan = (
-            rt.compiled_vector_scores(denorm, compiled, cfg=MATCHED)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
-    finally:
-        cache.unpersist()
-
-
 def test_warm_idf_compile_is_bit_identical(spark, docs_index, qdf):
     """r12: the driver-side idf warm cache (CorpusIndex.warm_idf) is a
     job-count optimization only — compiled scores with a COMPLETE

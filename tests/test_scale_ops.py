@@ -2406,6 +2406,32 @@ def test_cli_index_persists_servable_index(spark, tmp_path):
     assert serve(loaded) == serve(fresh)
 
 
+def test_cli_index_dir_reuses_committed_snapshot(spark, tmp_path, monkeypatch):
+    """`run`/`evaluate --index-dir`: the first call builds and saves a
+    versioned snapshot (index-v{N} + commit marker); the second must
+    load it, not rebuild."""
+    from beyond_vector_search_spark import cli
+
+    docs = spark.createDataFrame(
+        [
+            ("D1", "Spark joins", "Broadcast joins avoid a shuffle."),
+            ("D2", "Incident INC-40101", "INC-40101 was a disk failure."),
+        ],
+        "doc_id STRING, title STRING, text STRING",
+    )
+    d = str(tmp_path / "idx")
+    first = cli._index(spark, docs, d)
+
+    def rebuild(*a, **kw):
+        raise AssertionError("index rebuilt despite a committed snapshot")
+
+    monkeypatch.setattr(cli, "build_index", rebuild)
+    again = cli._index(spark, docs, d)
+    rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    assert rows(again.term_stats) == rows(first.term_stats)
+    assert rows(again.doc_vec) == rows(first.doc_vec)
+
+
 def test_fsutil_hadoop_fs_roundtrip(spark, tmp_path):
     """sources/fsutil — the Hadoop-FS helpers every store maintenance
     path routes through: exists/list/delete/rename/write_text behave

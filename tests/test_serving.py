@@ -116,33 +116,28 @@ def test_unknown_arm_rejected(spark, corpus_index):
         arms.arm("bm42")
 
 
-def test_duplicate_query_ids_fail_loudly(spark, corpus_index):
+def test_duplicate_query_ids_fail_loudly(spark, corpus_index, monkeypatch):
     """Duplicate query_ids are a caller bug on EVERY path: tuple input
-    fails at construction (before any plan exists), and compiled=False
-    — which skips compile's own check — must fail too, because the
-    join form would silently SUM the duplicates into doubled scores."""
+    fails at construction (before any plan exists), a DataFrame batch
+    fails in compile's own check, and a batch compile rejects must fail
+    too — the join-form fallback would silently SUM the duplicates into
+    doubled scores."""
     _, idx = corpus_index
     dup = [("q1", "spark join"), ("q1", "vector hash")]
     with pytest.raises(rt.DuplicateQueryIdError, match="duplicate query_id"):
         ServingArms(idx, dup, cfg=_CFG)
+    dup_df = spark.createDataFrame([(1, "spark join"), (1, "vector hash")], "query_id int, query string")
     with pytest.raises(rt.DuplicateQueryIdError, match="duplicate query_id"):
-        ServingArms(idx, dup, cfg=_CFG, compiled=False)
-    # DataFrame input with compiled=False: the one-job uniqueness probe
-    # fires before the first join-form arm builds
-    dup_df = spark.createDataFrame(dup, "query_id string, query string")
-    arms = ServingArms(idx, dup_df, cfg=_CFG, compiled=False)
-    with pytest.raises(rt.DuplicateQueryIdError, match="duplicate query_id"):
-        arms.arm("keyword")
+        ServingArms(idx, dup_df, cfg=_CFG).arm("keyword")
 
+    # a rejected compile (the bulk regime) falls back to the join form,
+    # whose one-job uniqueness probe fires before the first arm builds
+    def reject(*a, **kw):
+        raise ValueError("query batch exceeds the bulk cap")
 
-def test_materialize_noop_without_cache(spark, corpus_index):
-    """materialize() with cache=False has nothing to warm — it must
-    no-op instead of running count jobs whose rows are discarded."""
-    _, idx = corpus_index
-    arms = ServingArms(idx, QS, cfg=_CFG, cache=False)
-    assert arms.materialize() is arms
-    assert arms._arms == {}  # no arm was built, let alone counted
-    arms.release()
+    monkeypatch.setattr(rt, "compile_query_batch", reject)
+    with pytest.raises(rt.DuplicateQueryIdError, match=r"duplicate query_id in batch \(1\)"):
+        ServingArms(idx, dup_df, cfg=_CFG).arm("keyword")
 
 
 def test_oversized_dataframe_batch_bounded_collect(spark, corpus_index):

@@ -26,6 +26,8 @@ CALLS = int(os.environ.get("SPARK_GRAFT_SWEEP_CALLS", "2"))
 
 
 def main() -> None:
+    if CALLS < 1:
+        raise SystemExit(f"SPARK_GRAFT_SWEEP_CALLS must be >= 1 (got {CALLS})")
     from beyond_vector_search_spark.plans.entry_queries import all_queries
     from beyond_vector_search_spark.session import get_spark
 
@@ -41,7 +43,6 @@ def main() -> None:
         raise SystemExit(f"unknown entries: {unknown}")
 
     total = 0.0
-    results: dict[str, list[float]] = {}
     for name in names:
         fn = queries[name]
         times = []
@@ -58,7 +59,6 @@ def main() -> None:
         spark.sparkContext.setJobDescription(None)
         if times is None:
             continue
-        results[name] = times
         total += times[0]
         print(json.dumps({"entry": name, "calls": times}), flush=True)
     print(json.dumps({"total_first_calls": round(total, 3), "sf_dir": SF_DIR}))
