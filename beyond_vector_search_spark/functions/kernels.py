@@ -11,12 +11,14 @@ intermediate caches), this kernel 1.4 s warm.
 These kernels are the engine's ONLY Python in an index hot path, and
 they follow the Pandas-UDF rules: Arrow batch transfer, per-batch
 vectorized-ish loops (collections.Counter over slices), no per-row UDF
-calls.  Each kernel reproduces the reference semantics exactly
-(citations into /root/reference):
+calls.  Text featurization is defined ONCE, in the two plain functions
+below, and every Python consumer (these kernels, the dedup / fusion /
+pretrain kernels, the query compiler in operators/retrieval.py) calls
+them — each reproduces the reference semantics exactly:
 
-- token kernel: re.findall('[A-Za-z0-9]+(?:[-_][A-Za-z0-9]+)*') then
+- ``tokens``: re.findall('[A-Za-z0-9]+(?:[-_][A-Za-z0-9]+)*') then
   per-token lower() — reference text.py:8-17 verbatim.
-- gram kernel: lower, collapse \\s+ to ' ', strip, all char n-grams
+- ``char_grams``: lower, collapse \\s+ to ' ', strip, all char n-grams
   (whole string if shorter, none if empty) — reference
   retrievers.py:33-44 verbatim.
 
@@ -55,8 +57,26 @@ _WS_RE = re.compile(
     "[\t\n\x0b\x0c\r \x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]+"
 )
 # F.trim strips ' ' only — after the collapse above the only whitespace
-# left at the edges IS the replacement ' ', so callers use strip(" ")
+# left at the edges IS the replacement ' ', so char_grams uses strip(" ")
 # (a bare .strip() would also eat \x1c-\x1f, diverging again).
+
+
+def tokens(text: str | None) -> list[str]:
+    """Reference tokenizer (text.py:8-17): regex matches, lowercased.
+    The one Python definition — every Arrow kernel and the query
+    compiler call it; functions.text.tokenize is its Spark twin."""
+    return [t.lower() for t in _TOKEN_RE.findall(text or "")]
+
+
+def char_grams(text: str | None, n: int) -> list[str]:
+    """Reference char n-grams (retrievers.py:33-44): lowercase, collapse
+    whitespace runs to ' ', strip, then every n-char window — the whole
+    string if shorter than ``n``, nothing if empty.  The one Python
+    definition; functions.text.char_ngrams is its Spark twin."""
+    s = _WS_RE.sub(" ", (text or "").lower()).strip(" ")
+    if len(s) >= n:
+        return [s[i : i + n] for i in range(len(s) - n + 1)]
+    return [s] if s else []
 
 
 def fan_out(src: DataFrame) -> DataFrame:
@@ -134,7 +154,7 @@ def term_tf_frame(docs: DataFrame, *, id_col: str = "doc_id", text: Column | str
             tfs: list = []
             dls: list = []
             for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                counts = Counter(t.lower() for t in _TOKEN_RE.findall(txt or ""))
+                counts = Counter(tokens(txt))
                 dl = sum(counts.values())
                 for term, tf in counts.items():
                     ids.append(doc_id)
@@ -144,72 +164,6 @@ def term_tf_frame(docs: DataFrame, *, id_col: str = "doc_id", text: Column | str
             yield _emit(pdf, ids, terms, tfs, "term", dls)
 
     return src.mapInPandas(kernel, f"doc_id {id_type}, term string, tf long, dl long")
-
-
-def fused_tf_frame(
-    docs: DataFrame, *, id_col: str = "doc_id", text: Column | str = "text", n: int = 4
-) -> DataFrame:
-    """(doc_id, kind, key, tf, dl) — :func:`term_tf_frame` AND
-    :func:`gram_tf_frame` rows from ONE pass over the corpus text,
-    tagged ``kind='t'`` (key=term, dl=token count) / ``kind='g'``
-    (key=gram, dl=0).
-
-    The two single-purpose kernels each scan, decode, and Arrow-ship
-    the full text column; an index build needs BOTH relations, so the
-    fused pass halves the corpus I/O and the Python transfer — at
-    100 TB that is the difference between reading the corpus once and
-    twice (the per-row Counter work is identical either way).  Row
-    contents are exactly the union of the two kernels' outputs (parity
-    pinned by test); consumers slice on ``kind`` AFTER the fused
-    relation is checkpointed, so the text is never rescanned
-    (corpus_index.build_delta_fused)."""
-    src, id_type = _project(docs, id_col, text)
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            ids: list = []
-            kinds: list = []
-            keys: list = []
-            tfs: list = []
-            dls: list = []
-            for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                counts = Counter(t.lower() for t in _TOKEN_RE.findall(txt or ""))
-                dl = sum(counts.values())
-                for term, tf in counts.items():
-                    ids.append(doc_id)
-                    kinds.append("t")
-                    keys.append(term)
-                    tfs.append(tf)
-                    dls.append(dl)
-                s = _WS_RE.sub(" ", (txt or "").lower()).strip(" ")
-                length = len(s)
-                if length >= n:
-                    gcounts = Counter(s[i : i + n] for i in range(length - n + 1))
-                elif s:
-                    gcounts = Counter((s,))
-                else:
-                    gcounts = Counter()
-                for gram, tf in gcounts.items():
-                    ids.append(doc_id)
-                    kinds.append("g")
-                    keys.append(gram)
-                    tfs.append(tf)
-                    dls.append(0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-                    "kind": pd.Series(kinds, dtype="object"),
-                    "key": pd.Series(keys, dtype="object"),
-                    "tf": pd.Series(tfs, dtype="int64"),
-                    "dl": pd.Series(dls, dtype="int64"),
-                }
-            )
-
-    return src.mapInPandas(
-        kernel, f"doc_id {id_type}, kind string, key string, tf long, dl long"
-    )
 
 
 def gram_tf_frame(
@@ -225,15 +179,7 @@ def gram_tf_frame(
             grams: list = []
             tfs: list = []
             for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                s = _WS_RE.sub(" ", (txt or "").lower()).strip(" ")
-                length = len(s)
-                if length >= n:
-                    counts = Counter(s[i : i + n] for i in range(length - n + 1))
-                elif s:
-                    counts = Counter((s,))
-                else:
-                    counts = Counter()
-                for gram, tf in counts.items():
+                for gram, tf in Counter(char_grams(txt, n)).items():
                     ids.append(doc_id)
                     grams.append(gram)
                     tfs.append(tf)

@@ -83,18 +83,15 @@ def top_terms_udtf(df: DataFrame, *, text_col: str = "text", n: int = 3) -> Data
     (the UDTF execution shape with Arrow batching; Spark 4's
     ``@udtf`` decorator runs row-at-a-time, so the batched iterator
     form is preferred in pipelines)."""
-    import re
+    from collections import Counter
 
-    token_re = re.compile(r"[A-Za-z0-9]+(?:[-_][A-Za-z0-9]+)*")
+    from beyond_vector_search_spark.functions.kernels import tokens
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                counts: dict[str, int] = {}
-                for t in token_re.findall(text or ""):
-                    t = t.lower()
-                    counts[t] = counts.get(t, 0) + 1
+                counts = Counter(tokens(text))
                 best = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:n]
                 for rank, (term, tf) in enumerate(best, 1):
                     out.append((int(doc_id), term, int(tf), rank))

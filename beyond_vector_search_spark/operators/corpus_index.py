@@ -2,18 +2,24 @@
 
 Re-expresses the reference's index builders (index.py:21-46 build_corpus_stats,
 retrievers.py:57-85 VectorRetriever.build, retrievers.py:117-123
-KeywordRetriever.build) as pure ``groupBy``/``agg`` dataflow:
+KeywordRetriever.build) as pure ``groupBy``/``agg`` dataflow, in two
+steps.  :func:`build_delta` scans the document text once per term space
+into the idf-independent per-document relations (:class:`IndexDelta`);
+:func:`index_from_delta` is the ONE derivation of every global
+statistic from them (``build_index`` and every incremental refresh go
+through it):
 
-    documents ──tokenize──> doc_tokens ──explode──┬─> postings(term, doc_id, tf)
-                                                  └─> term_stats(term, df, idf, is_rare)
-              ──char_ngrams──> doc_grams ─────────┬─> gram_stats(gram, df, idf)
-                                                  └─> doc_vec(doc_id, gram, weight)
-                                                      doc_norm(doc_id, norm)
+    documents ──tokens──> postings(term, doc_id, tf, dl) ─┬─groupBy(term)──> term_stats(term, df, idf, is_rare)
+              │                                           └─groupBy(doc_id)─> doc_stats(doc_id, doc_len) ──> scalars(n_docs, avg_dl)
+              ├─char 4-grams─> gram_tf(doc_id, gram, tf) ─┬─groupBy(gram)──> gram_stats(gram, df, idf)
+              │                                           └─join idf──> weights ─┬─groupBy(doc_id)─> doc_norm(doc_id, norm)
+              │                                                                  └─join doc_norm──> doc_vec(doc_id, gram, weight, norm)
+              └─────────────> doc_ids(doc_id)
 
 Catalyst performs partial+final hash aggregation (map-side combine) for
 every groupBy here, so the document-frequency counts never shuffle raw
-token streams — only (term, partial_count) pairs.  Corpus-level scalars
-(n_docs, avg_dl) are 1-row DataFrames crossJoin-broadcast into consumers,
+token streams — only (term, partial_count) pairs.  The corpus size
+(n_docs) is a 1-row DataFrame crossJoin-broadcast into consumers,
 keeping the whole build lazy and cluster-sized (never ``collect()``ed).
 
 The token space and the char-4-gram space are deliberately DISJOINT
@@ -28,7 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from beyond_vector_search_spark.config import DEFAULT, EngineConfig
-from beyond_vector_search_spark.functions.text import char_ngrams, tokenize
+from beyond_vector_search_spark.functions.text import tokenize
 
 # Smoothed BM25-style idf: ln(1 + (N - df + 0.5)/(df + 0.5))  (index.py:39-41;
 # the same formula is reused for the gram space at retrievers.py:71).
@@ -60,49 +66,6 @@ def doc_grams(docs: DataFrame, *, id_col: str = "doc_id", text: Column | str = "
     return normed.select("doc_id", char_ngrams_from_normed("_s", n).alias("grams"))
 
 
-def corpus_scalars(tokens_df: DataFrame) -> DataFrame:
-    """1-row (n_docs, avg_dl): token totals of the corpus (index.py:31-35).
-
-    avg_dl is an exact integer-sum / integer-count division — deterministic
-    across partitionings (int sums are order-independent).
-    """
-    return tokens_df.agg(
-        F.greatest(F.count("*"), F.lit(1)).alias("n_docs"),
-        # coalesce: sum() over ZERO rows is NULL — an empty corpus must
-        # yield avg_dl 0.0, not crash scalar_values() with float(None)
-        (F.coalesce(F.sum(F.size("tokens")), F.lit(0)) / F.greatest(F.count("*"), F.lit(1))).alias("avg_dl"),
-    )
-
-
-def build_doc_stats(tokens_df: DataFrame) -> DataFrame:
-    """(doc_id, doc_len) — per-document token count (index.py:28-30)."""
-    return tokens_df.select("doc_id", F.size("tokens").alias("doc_len"))
-
-
-def build_term_stats(
-    tokens_df: DataFrame,
-    *,
-    rare_df_threshold: int = 1,
-) -> DataFrame:
-    """(term, df, idf, is_rare) — document frequency + smoothed idf
-    (index.py:21-46).  df counts documents, not occurrences, hence the
-    ``array_distinct`` before the explode (matches the per-doc ``set(toks)``
-    at index.py:33).
-    """
-    n = corpus_scalars(tokens_df).select("n_docs")
-    per_term = (
-        tokens_df.select("doc_id", F.explode(F.array_distinct("tokens")).alias("term"))
-        .groupBy("term")
-        .agg(F.count("*").alias("df"))
-    )
-    return per_term.crossJoin(F.broadcast(n)).select(
-        "term",
-        "df",
-        _idf(F.col("n_docs"), F.col("df")).alias("idf"),
-        (F.col("df") <= rare_df_threshold).alias("is_rare"),
-    )
-
-
 def build_postings(tokens_df: DataFrame) -> DataFrame:
     """(term, doc_id, tf, dl) — the inverted index (retrievers.py:117-123's
     per-doc term-frequency maps, in long format).  ``dl`` = the doc's
@@ -115,37 +78,6 @@ def build_postings(tokens_df: DataFrame) -> DataFrame:
         .groupBy("term", "doc_id", "dl")
         .agg(F.count("*").alias("tf"))
         .select("term", "doc_id", "tf", "dl")
-    )
-
-
-def build_gram_stats(grams_df: DataFrame) -> DataFrame:
-    """(gram, df, idf) — char-n-gram document frequency + idf
-    (retrievers.py:62-71). Same smoothed-idf formula, disjoint space."""
-    n = grams_df.agg(F.greatest(F.count("*"), F.lit(1)).alias("n_docs"))
-    per_gram = (
-        grams_df.select("doc_id", F.explode(F.array_distinct("grams")).alias("gram"))
-        .groupBy("gram")
-        .agg(F.count("*").alias("df"))
-    )
-    return per_gram.crossJoin(F.broadcast(n)).select(
-        "gram", "df", _idf(F.col("n_docs"), F.col("df")).alias("idf")
-    )
-
-
-def build_doc_vec(grams_df: DataFrame, gram_stats: DataFrame) -> DataFrame:
-    """(doc_id, gram, weight) — sublinear TF-IDF doc vectors in long
-    format (retrievers.py:73-84): weight = (1 + ln(tf)) * idf.
-
-    Long format IS the idiomatic Spark representation of a sparse matrix;
-    the cosine join in retrieval.py is then a plain equi-join.
-    """
-    tf = (
-        grams_df.select("doc_id", F.explode("grams").alias("gram"))
-        .groupBy("doc_id", "gram")
-        .agg(F.count("*").alias("tf"))
-    )
-    return tf.join(gram_stats.select("gram", "idf"), "gram").select(
-        "doc_id", "gram", ((1.0 + F.log("tf")) * F.col("idf")).alias("weight")
     )
 
 
@@ -162,7 +94,9 @@ def build_doc_norm(doc_vec: DataFrame) -> DataFrame:
 
 @dataclass
 class CorpusIndex:
-    """The persisted index of the engine — six DataFrames.
+    """The persisted index of the engine — eight DataFrames (the
+    ``_FIELDS`` that save/load persist) plus the optional in-session
+    ``gram_tf``, all derived by :func:`index_from_delta`.
 
     Unlike the reference (which rebuilds the whole index on every CLI
     invocation, run.py:18-23), the index is built once, optionally
@@ -190,7 +124,7 @@ class CorpusIndex:
     def cache(self, *, skip: tuple = ()) -> "CorpusIndex":
         """Cache the index relations.  ``skip`` names fields to leave
         uncached — the serving profile built over a checkpointed delta
-        skips (a) postings/doc_ids, already eagerly materialized by the
+        skips (a) postings/doc_ids, already materialized by the
         checkpoint (caching them again would store a second, columnar
         copy of the same rows), and (b) doc_vec, which is cheaper to
         re-derive per query (one scan of checkpointed gram_tf + two
@@ -543,14 +477,19 @@ class IndexDelta:
         ``new_docs_delta``, then union its rows in."""
         return self.remove(new_docs_delta.doc_ids).union(new_docs_delta)
 
-    def checkpoint(
+    def checkpoint_background(
         self,
         *,
         target_partitions: int | None = None,
         storage_level=None,
-    ) -> "IndexDelta":
-        """Materialize eagerly via ``localCheckpoint`` (concurrent jobs)
-        and truncate lineage.
+    ) -> tuple["IndexDelta", "object"]:
+        """Materialize every relation via ``localCheckpoint`` and
+        truncate lineage, overlapped with the caller: returns
+        immediately with ``(delta, join)`` — the kernel jobs
+        materialize in background threads while the CALLER spends its
+        driver time building the derived-index plans over the
+        (lazy-checkpointed) relations; ``join()`` blocks until every
+        relation's blocks exist.
 
         Two effects, both measured at sf0.1:
         - each tokenize/shingle kernel runs EXACTLY once (a lazy cache
@@ -560,6 +499,15 @@ class IndexDelta:
           downstream plans (which walks the full tree on every
           ``.cache()`` and every query) drops from seconds to
           milliseconds.
+
+        The single-forcer guarantee replaces eagerness: exactly one
+        background thread forces each relation, so the kernels still
+        run exactly once — but the caller MUST ``join()`` before any
+        OTHER action can touch the returned delta (a sibling action
+        racing the forcing thread would recompute the kernel).
+        Measured at sf0.1: overlapping the ~0.3 s of plan
+        construction/cache registration with the ~1 s kernel wave
+        shaves that 0.3 s off the serving index build.
 
         ``target_partitions`` coalesces the checkpointed blocks for
         downstream readers (narrow — no shuffle, kernel parallelism
@@ -576,49 +524,12 @@ class IndexDelta:
         per row — fastest to re-read, but ~3x the payload bytes in
         object headers, and 32 concurrent downstream aggregation tasks
         on top of that is exactly how the 500k-doc build blew an 8 GiB
-        local[32] heap (r10 finding #1).  Pass
-        ``StorageLevel.MEMORY_AND_DISK`` (serialized, spillable) for
-        large corpora — measured: the 500k-doc build that OOM'd the
-        default heap completes in it unchanged.  The cluster equivalent
-        is persisting the delta to parquet (``save``) and reading it
-        back — same lineage cut; use that for multi-job pipelines, this
-        for within-session serving."""
-        import concurrent.futures as cf
-
-        with cf.ThreadPoolExecutor(max_workers=len(self._FIELDS)) as ex:
-            futs = {
-                f: ex.submit(
-                    getattr(self, f).localCheckpoint, True, storage_level
-                )
-                for f in self._FIELDS
-            }
-            out = {f: fut.result() for f, fut in futs.items()}
-        if target_partitions is not None:
-            # coalesce never increases a partition count, so a target
-            # above the checkpointed count is a no-op — no need to probe
-            out = {f: df.coalesce(max(1, target_partitions)) for f, df in out.items()}
-        return IndexDelta(**out)
-
-    def checkpoint_background(
-        self,
-        *,
-        target_partitions: int | None = None,
-        storage_level=None,
-    ) -> tuple["IndexDelta", "object"]:
-        """:meth:`checkpoint`, overlapped: returns immediately with
-        ``(delta, join)`` — the kernel jobs materialize in background
-        threads while the CALLER spends its driver time building the
-        derived-index plans over the (lazy-checkpointed) relations;
-        ``join()`` blocks until every relation's blocks exist.
-
-        The single-forcer guarantee replaces eagerness: exactly one
-        background thread forces each relation, so the kernels still
-        run exactly once — but the caller MUST ``join()`` before any
-        OTHER action can touch the returned delta (a sibling action
-        racing the forcing thread would recompute the kernel).
-        Measured at sf0.1: overlapping the ~0.3 s of plan
-        construction/cache registration with the ~1 s kernel wave
-        shaves that 0.3 s off the serving index build."""
+        local[32] heap.  Pass ``StorageLevel.MEMORY_AND_DISK``
+        (serialized, spillable) for large corpora — measured: the
+        500k-doc build that ran out of the default heap completes in it
+        unchanged.  The cluster equivalent is persisting the delta to
+        parquet (``save``) and reading it back — same lineage cut; use
+        that for multi-job pipelines, this for within-session serving."""
         import concurrent.futures as cf
 
         lazy = {
@@ -778,9 +689,10 @@ def build_delta(
     """One scan of the corpus text -> per-document tf relations.
 
     ``cache=False`` skips the lazy caches — for callers that
-    immediately ``.checkpoint()`` the delta (eager materialization
-    makes the caches dead weight: one more canonicalization pass per
-    relation for blocks that will never be read)."""
+    immediately checkpoint the delta (:meth:`IndexDelta.checkpoint_background`:
+    materialized blocks make the caches dead weight, one more
+    canonicalization pass per relation for blocks that will never be
+    read)."""
     arrow = cfg.index_kernel == "arrow"
     keep = (lambda df: df.cache()) if cache else (lambda df: df)
     if arrow:
@@ -814,71 +726,6 @@ def build_delta(
         gram_tf=gram_tf,
         doc_ids=docs.select(F.col(id_col).alias("doc_id")),
     )
-
-
-def build_delta_fused(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text: Column | str = "text",
-    cfg: EngineConfig = DEFAULT,
-    target_partitions: int | None = None,
-    storage_level=None,
-) -> IndexDelta:
-    """``build_delta(...).checkpoint(...)`` with the corpus text
-    scanned ONCE: the fused term+gram kernel
-    (functions/kernels.fused_tf_frame) is eagerly localCheckpoint-ed,
-    and postings/gram_tf become narrow ``kind`` filters over the
-    checkpointed blocks — identical rows to the two-kernel path
-    (parity pinned by test), half the text I/O and Arrow transfer.
-    ``doc_ids`` checkpoints concurrently (an id-only column scan).
-
-    This is the serving/bench builder; callers that need the lazy
-    relations (streaming deltas that go straight to parquet) keep
-    :func:`build_delta`.  Requires the arrow kernel profile — the
-    expression path has no fused form."""
-    import concurrent.futures as cf
-
-    from beyond_vector_search_spark.functions import kernels
-
-    if cfg.index_kernel != "arrow":
-        return build_delta(docs, id_col=id_col, text=text, cfg=cfg, cache=False).checkpoint(
-            target_partitions=target_partitions, storage_level=storage_level
-        )
-    fused_lazy = kernels.fused_tf_frame(docs, id_col=id_col, text=text, n=cfg.ngram_n)
-    ids_lazy = docs.select(F.col(id_col).alias("doc_id"))
-    with cf.ThreadPoolExecutor(max_workers=2) as ex:
-        f_fused = ex.submit(fused_lazy.localCheckpoint, True, storage_level)
-        f_ids = ex.submit(ids_lazy.localCheckpoint, True, storage_level)
-        fused, doc_ids = f_fused.result(), f_ids.result()
-    # Re-checkpoint each slice into its OWN blocks: leaving postings/
-    # gram_tf as kind-filters over the fused blocks would make every
-    # downstream consumer (the compiled postings scan is the serving
-    # hot path) read BOTH families' rows and filter — ~2x the scan per
-    # query, forever.  The slice pass reads already-tokenized rows
-    # (no regex, no text transfer), so the text is still scanned once.
-    tgt = max(1, target_partitions) if target_partitions is not None else None
-
-    def _slice(df: DataFrame) -> DataFrame:
-        # checkpoint at source width (the slice pass keeps the fused
-        # blocks' parallelism), coalesce only what downstream READS —
-        # the same order IndexDelta.checkpoint uses
-        out = df.localCheckpoint(storageLevel=storage_level)
-        return out.coalesce(tgt) if tgt is not None else out
-
-    post_lazy = fused.where(F.col("kind") == "t").select(
-        F.col("key").alias("term"), "doc_id", "tf", "dl"
-    )
-    gram_lazy = fused.where(F.col("kind") == "g").select(
-        "doc_id", F.col("key").alias("gram"), "tf"
-    )
-    with cf.ThreadPoolExecutor(max_workers=2) as ex:
-        f_p = ex.submit(_slice, post_lazy)
-        f_g = ex.submit(_slice, gram_lazy)
-        postings, gram_tf = f_p.result(), f_g.result()
-    if tgt is not None:
-        doc_ids = doc_ids.coalesce(tgt)
-    return IndexDelta(postings=postings, gram_tf=gram_tf, doc_ids=doc_ids)
 
 
 def index_from_delta(delta: IndexDelta, *, cfg: EngineConfig = DEFAULT) -> CorpusIndex:

@@ -72,7 +72,7 @@ def shingle_rows(
     if kernel:
         from collections.abc import Iterator
 
-        from beyond_vector_search_spark.functions.kernels import _TOKEN_RE, _project
+        from beyond_vector_search_spark.functions.kernels import _project, tokens
 
         src, id_type = _project(df, id_col, F.col(text_col))
 
@@ -82,7 +82,7 @@ def shingle_rows(
             for pdf in batches:
                 ids, shs = [], []
                 for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                    toks = [t.lower() for t in _TOKEN_RE.findall(txt or "")]
+                    toks = tokens(txt)
                     for s in _shingle_set(toks, n):
                         ids.append(doc_id)
                         shs.append(s)
@@ -220,7 +220,7 @@ def _minhash_kernel(
     SCALING.jsonl probe point (same finding as the SimHash kernel)."""
     from collections.abc import Iterator
 
-    from beyond_vector_search_spark.functions.kernels import _TOKEN_RE, _project
+    from beyond_vector_search_spark.functions.kernels import _project, tokens
 
     src, id_type = _project(df, id_col, F.col(text_col))
 
@@ -231,7 +231,7 @@ def _minhash_kernel(
         for pdf in batches:
             ids, sigs = [], []
             for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                toks = [t.lower() for t in _TOKEN_RE.findall(txt or "")]
+                toks = tokens(txt)
                 ids.append(doc_id)
                 sigs.append(_minhash_sig(toks, shingle_n, num_hashes, digests))
             yield pd.DataFrame(
@@ -291,7 +291,7 @@ def minhash_shingle_rows(
     exactly :func:`shingle_rows` — both pinned by test."""
     from collections.abc import Iterator
 
-    from beyond_vector_search_spark.functions.kernels import _TOKEN_RE, _project
+    from beyond_vector_search_spark.functions.kernels import _project, tokens
 
     src, id_type = _project(df, id_col, F.col(text_col))
 
@@ -302,7 +302,7 @@ def minhash_shingle_rows(
         for pdf in batches:
             ids, sigs, shs = [], [], []
             for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                toks = [t.lower() for t in _TOKEN_RE.findall(txt or "")]
+                toks = tokens(txt)
                 shingles = _shingle_set(toks, shingle_n)
                 ids.append(doc_id)
                 sigs.append(_sig_from_shingles(shingles, num_hashes, digests))
@@ -348,7 +348,7 @@ def doc_signatures(
     """
     from collections.abc import Iterator
 
-    from beyond_vector_search_spark.functions.kernels import _TOKEN_RE, _project
+    from beyond_vector_search_spark.functions.kernels import _project, tokens
 
     _check_simhash_bits(bits)
     src, id_type = _project(df, id_col, F.col(text_col))
@@ -367,7 +367,7 @@ def doc_signatures(
         for pdf in batches:
             ids, sigs, fps, prints = [], [], [], []
             for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                toks = [t.lower() for t in _TOKEN_RE.findall(txt or "")]
+                toks = tokens(txt)
                 tokset = set(toks)
                 ids.append(doc_id)
                 sigs.append(_minhash_sig(toks, shingle_n, num_hashes, digests))
@@ -702,7 +702,7 @@ def positioned_shingle_rows(
     if kernel:
         from collections.abc import Iterator
 
-        from beyond_vector_search_spark.functions.kernels import _TOKEN_RE, _project
+        from beyond_vector_search_spark.functions.kernels import _project, tokens
 
         src, id_type = _project(df, id_col, F.col(text_col))
 
@@ -712,7 +712,7 @@ def positioned_shingle_rows(
             for pdf in batches:
                 ids, poss, shs = [], [], []
                 for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                    toks = [t.lower() for t in _TOKEN_RE.findall(txt or "")]
+                    toks = tokens(txt)
                     for i in range(len(toks) - n + 1):
                         ids.append(doc_id)
                         poss.append(i + 1)
@@ -839,7 +839,7 @@ def _simhash_kernel(
     """
     from collections.abc import Iterator
 
-    from beyond_vector_search_spark.functions.kernels import _TOKEN_RE, _project
+    from beyond_vector_search_spark.functions.kernels import _project, tokens
 
     _check_simhash_bits(bits)
     src, id_type = _project(df, id_col, F.col(text_col))
@@ -855,7 +855,7 @@ def _simhash_kernel(
         for pdf in batches:
             ids, fps = [], []
             for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                tokset = {t.lower() for t in _TOKEN_RE.findall(txt or "")}
+                tokset = set(tokens(txt))
                 ids.append(doc_id)
                 fps.append(_simhash_fp(tokset, shifts, powers, tok_hash))
             yield pd.DataFrame(

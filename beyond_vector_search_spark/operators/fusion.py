@@ -274,22 +274,16 @@ def phrase_counts(
     inverted index instead (dedup.positioned_shingle_rows) and join on
     the first term.
     """
-    import re
+    from beyond_vector_search_spark.functions.kernels import _project, tokens
+    from beyond_vector_search_spark.functions.text import tokenize
 
-    from beyond_vector_search_spark.functions.text import TOKEN_PATTERN, tokenize
-
-    ptoks_by_phrase = [
-        (phrase, [t.lower() for t in re.findall(TOKEN_PATTERN, phrase)])
-        for phrase in phrases
-    ]
+    ptoks_by_phrase = [(phrase, tokens(phrase)) for phrase in phrases]
     ptoks_by_phrase = [(p, pt) for p, pt in ptoks_by_phrase if pt]
     if not ptoks_by_phrase:
         raise ValueError("no non-empty phrases given")
 
     if kernel:
         from collections.abc import Iterator
-
-        from beyond_vector_search_spark.functions.kernels import _TOKEN_RE, _project
 
         src, id_type = _project(docs, id_col, F.col(text_col))
 
@@ -299,7 +293,7 @@ def phrase_counts(
             for pdf in batches:
                 ids, phs, tfs = [], [], []
                 for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                    toks = [t.lower() for t in _TOKEN_RE.findall(txt or "")]
+                    toks = tokens(txt)
                     n = len(toks)
                     for phrase, pt in ptoks_by_phrase:
                         m = len(pt)
@@ -391,7 +385,7 @@ def proximity_counts(
     if kernel:
         from collections.abc import Iterator
 
-        from beyond_vector_search_spark.functions.kernels import _TOKEN_RE, _project
+        from beyond_vector_search_spark.functions.kernels import _project, tokens
 
         pairs = [(a, b, a.lower(), b.lower()) for a, b in term_pairs]
         if not pairs:
@@ -404,7 +398,7 @@ def proximity_counts(
             for pdf in batches:
                 ids, tas, tbs, mds, nws = [], [], [], [], []
                 for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                    toks = [t.lower() for t in _TOKEN_RE.findall(txt or "")]
+                    toks = tokens(txt)
                     for a, b, al, bl in pairs:
                         pa = [i for i, t in enumerate(toks) if t == al]
                         pb = [i for i, t in enumerate(toks) if t == bl]

@@ -109,7 +109,7 @@ def benchmark_contamination(
             )
         from collections.abc import Iterator
 
-        from beyond_vector_search_spark.functions.kernels import _TOKEN_RE, _project
+        from beyond_vector_search_spark.functions.kernels import _project, tokens
         from beyond_vector_search_spark.operators.dedup import _shingle_set
 
         if bench_shingles is not None:
@@ -121,7 +121,7 @@ def benchmark_contamination(
             # the kernel path, over one collect of the (small) eval set
             bench_set = set()
             for r in benchmark.select(F.col(text_col).alias("_text")).collect():
-                toks = [t.lower() for t in _TOKEN_RE.findall(r["_text"] or "")]
+                toks = tokens(r["_text"])
                 bench_set |= _shingle_set(toks, n)
             bench_set = frozenset(bench_set)
         bc = corpus.sparkSession.sparkContext.broadcast(bench_set)
@@ -134,7 +134,7 @@ def benchmark_contamination(
             for pdf in batches:
                 ids, ns = [], []
                 for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                    toks = [t.lower() for t in _TOKEN_RE.findall(txt or "")]
+                    toks = tokens(txt)
                     c = len(_shingle_set(toks, n) & bset)
                     if c:
                         ids.append(doc_id)
@@ -306,13 +306,13 @@ def _repetition_stats_kernel(
     """(doc_id, n_tokens, n_distinct, max_tf, sum_len, total_bi, max_bi)
     — the six per-document integer aggregates repetition_flags derives
     its ratios from, in one Arrow pass (same tokenizer as the
-    expression path: kernels._TOKEN_RE + lower; bigrams are the
+    expression path: kernels.tokens; bigrams are the
     non-distinct ``' '``-joined adjacent pairs of _bigram_array).
     Token-less documents emit nothing — exactly the rows the explode
     path loses (no (doc, gram) row means no aggregate group)."""
     from collections.abc import Iterator
 
-    from beyond_vector_search_spark.functions.kernels import _TOKEN_RE, _project
+    from beyond_vector_search_spark.functions.kernels import _project, tokens
 
     src, id_type = _project(df, id_col, F.col(text_col))
 
@@ -324,7 +324,7 @@ def _repetition_stats_kernel(
         for pdf in batches:
             ids, nt, nd, mt, sl, tb, mb = [], [], [], [], [], [], []
             for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                toks = [t.lower() for t in _TOKEN_RE.findall(txt or "")]
+                toks = tokens(txt)
                 n = len(toks)
                 if n == 0:
                     continue
@@ -635,9 +635,8 @@ def bigram_logppl(
 
     Shape: ONE fused explode emits both n-gram grains as (kind, gram)
     rows and ONE aggregation produces the combined per-doc tf relation
-    (the build_delta_fused pattern, operators/corpus_index.py) — the
-    corpus text is scanned and tokenized exactly once.  btf/wtf are
-    narrow ``kind`` filters over that relation, which is materialized
+    — the corpus text is scanned and tokenized exactly once.  btf/wtf
+    are narrow ``kind`` filters over that relation, which is materialized
     (lazy localCheckpoint; ``cache=True`` uses .cache() instead) so
     its four consumers — corpus bigram counts, unigram counts, and the
     final per-doc join — read the aggregated blocks, never the text.

@@ -380,8 +380,8 @@ def compile_query_batch(
 
     ``queries``: a (query_id, query) DataFrame or a plain list of
     (query_id, query) tuples.  Tokenization/shingling run driver-side
-    through the SAME compiled regexes as the Arrow index kernels
-    (functions/kernels.py — parity-tested against the Spark
+    through the SAME ``kernels.tokens`` / ``kernels.char_grams`` as
+    the Arrow index kernels (parity-tested against the Spark
     expressions), so the only cluster work is ONE isin-FILTERED
     COLLECT (term_stats + gram_stats lookups for the queries' own
     terms, unioned into one tagged job): no join, no shuffle, and on a
@@ -389,7 +389,7 @@ def compile_query_batch(
     import math
     from collections import Counter
 
-    from beyond_vector_search_spark.functions.kernels import _TOKEN_RE, _WS_RE
+    from beyond_vector_search_spark.functions.kernels import char_grams, tokens
 
     if isinstance(queries, DataFrame):
         # BOUNDED collect: the bulk fallback (ServingArms catching this
@@ -431,15 +431,8 @@ def compile_query_batch(
     q_gram_tf: dict[str, Counter] = {}
     n = cfg.ngram_n
     for qid, q in rows:
-        q_toks[qid] = sorted({t.lower() for t in _TOKEN_RE.findall(q or "")})
-        s = _WS_RE.sub(" ", (q or "").lower()).strip(" ")
-        if not s:
-            grams: list[str] = []
-        elif len(s) < n:
-            grams = [s]
-        else:
-            grams = [s[i : i + n] for i in range(len(s) - n + 1)]
-        q_gram_tf[qid] = Counter(grams)
+        q_toks[qid] = sorted(set(tokens(q)))
+        q_gram_tf[qid] = Counter(char_grams(q, n))
 
     all_terms = sorted({t for ts in q_toks.values() for t in ts})
     all_grams = sorted({g for c in q_gram_tf.values() for g in c})

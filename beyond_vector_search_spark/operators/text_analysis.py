@@ -38,7 +38,7 @@ def _with_tokens(df: DataFrame, id_col: str, text_col: str, *extra: str) -> Data
 # DuckDB oracle) lacks — this lookahead-free variant differs only in how
 # trailing/interior pure-whitespace runs group, which is fine for a
 # token-BUDGET estimate (counting, not tokenizing).
-WS_TOKEN_RE = r"\S+"
+WS_TOKEN_PATTERN = r"\S+"
 BPE_ISH_RE = r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+|\s+"
 
 
@@ -59,7 +59,7 @@ def token_stats(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
         n.cast("long").alias("n_tokens"),
         F.size(F.array_distinct(toks)).cast("long").alias("n_distinct"),
         F.when(n == 0, F.lit(0.0)).otherwise(total_len / n).alias("avg_token_len"),
-        F.regexp_count(F.col(text_col), F.lit(WS_TOKEN_RE)).cast("long").alias("ws_tokens"),
+        F.regexp_count(F.col(text_col), F.lit(WS_TOKEN_PATTERN)).cast("long").alias("ws_tokens"),
         F.regexp_count(F.col(text_col), F.lit(BPE_ISH_RE)).cast("long").alias("bpe_ish_tokens"),
     )
 
@@ -178,7 +178,7 @@ def text_profile(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text
         n.cast("long").alias("n_tokens"),
         F.size(F.array_distinct(toks)).cast("long").alias("n_distinct"),
         F.when(n == 0, F.lit(0.0)).otherwise(total_len / n).alias("avg_token_len"),
-        F.regexp_count(F.col("_text"), F.lit(WS_TOKEN_RE)).cast("long").alias("ws_tokens"),
+        F.regexp_count(F.col("_text"), F.lit(WS_TOKEN_PATTERN)).cast("long").alias("ws_tokens"),
         F.regexp_count(F.col("_text"), F.lit(BPE_ISH_RE)).cast("long").alias("bpe_ish_tokens"),
         n_chars.alias("n_chars"),
         alpha_ratio.alias("alpha_ratio"),

@@ -196,12 +196,12 @@ def _docs_index(spark: SparkSession, sf_dir: str) -> ci.CorpusIndex:
         # count proportional to the data instead of the core count.
         n_docs = docs.count()
         target = -(-n_docs // 2500)  # ceil
-        # two-kernel build: at bench SF the texts are ~1 KB and regex
-        # work dominates, so the fused single-text-pass builder
-        # (build_delta_fused) saves nothing here — it wins when the
-        # text column is expensive to scan/ship (measured A/B at sf0.1:
-        # 0.95 s vs 1.03 s; the fused builder's slice pass ~= the saved
-        # second scan at this size)
+        # two-kernel build (one text scan per term space): at bench SF
+        # the texts are ~1 KB and regex work dominates, so fusing both
+        # kernels into one text pass and slicing its checkpointed
+        # output saves nothing here — measured A/B at sf0.1, 0.95 s vs
+        # 1.03 s, the slice pass ~= the saved second scan.  A single
+        # pass only pays when the text column is expensive to scan/ship
         # background checkpoint: the tokenize/shingle kernel jobs run
         # while the driver builds the derived plans + cache
         # registrations below (~0.3 s of py4j work that used to wait

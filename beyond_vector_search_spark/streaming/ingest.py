@@ -79,6 +79,18 @@ def _write_marker(spark, marker: str, payload: dict) -> None:
     fsutil.write_text(spark, marker, json.dumps(payload))
 
 
+def _start(stream: DataFrame, sink, path: str, trigger: dict | None, checkpoint: str | None):
+    """Start ``stream`` as an append-mode ``foreachBatch(sink)`` query —
+    the one starter every ``start_*_ingest`` shares.  ``trigger`` is
+    passed to ``DataStreamWriter.trigger`` when given; the checkpoint
+    location defaults to ``{path}/_checkpoint``."""
+    w = stream.writeStream.foreachBatch(sink).outputMode("append")
+    if trigger:
+        w = w.trigger(**trigger)
+    w = w.option("checkpointLocation", checkpoint or os.path.join(path, "_checkpoint"))
+    return w.start()
+
+
 def append_delta_batch(
     docs_batch: DataFrame,
     batch_id: int,
@@ -502,11 +514,7 @@ def start_upsert_ingest(
             auto_compact_epochs=auto_compact_epochs,
         )
 
-    w = doc_stream.writeStream.foreachBatch(sink).outputMode("append")
-    if trigger:
-        w = w.trigger(**trigger)
-    w = w.option("checkpointLocation", checkpoint or os.path.join(path, "_checkpoint"))
-    return w.start()
+    return _start(doc_stream, sink, path, trigger, checkpoint)
 
 
 def start_index_ingest(
@@ -526,11 +534,7 @@ def start_index_ingest(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         append_delta_batch(batch_df, batch_id, path, id_col=id_col, text=text, cfg=cfg)
 
-    w = doc_stream.writeStream.foreachBatch(sink).outputMode("append")
-    if trigger:
-        w = w.trigger(**trigger)
-    w = w.option("checkpointLocation", checkpoint or os.path.join(path, "_checkpoint"))
-    return w.start()
+    return _start(doc_stream, sink, path, trigger, checkpoint)
 
 
 def append_vector_batch(
@@ -600,105 +604,7 @@ def start_vector_ingest(
             batch_df, batch_id, store_path, id_col=id_col, vec_col=vec_col
         )
 
-    w = vec_stream.writeStream.foreachBatch(sink).outputMode("append")
-    if trigger:
-        w = w.trigger(**trigger)
-    w = w.option(
-        "checkpointLocation", checkpoint or os.path.join(store_path, "_checkpoint")
-    )
-    return w.start()
-
-
-def append_graph_batch(
-    vec_batch: DataFrame,
-    batch_id: int,
-    store_path: str,
-    *,
-    base_embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **extend_kw,
-) -> bool:
-    """Extend the persisted :class:`KnnGraphIndex` at ``store_path``
-    with ONE micro-batch of vectors (``nndescent_extend`` under
-    ``KnnGraphIndex.append`` — only the batch's new nodes and their
-    blast-radius base lists are rewritten, LWW per node).  Returns
-    False on skip.
-
-    Same idempotence story as :func:`append_vector_batch`: a retried
-    epoch overwrites its own ``batch_id=N`` directory, the marker file
-    is the fast-skip plus the replay guard after a compact/rebuild
-    folds batch directories, and epoch ids are offset by +1 so
-    streaming epoch 0 never collides with the initial build's
-    ``batch_id=0``.
-
-    ``base_embeddings`` supplies vectors for the store's EXISTING
-    nodes (the graph persists structure only — see
-    ``KnnGraphIndex.search``); pass the corpus embeddings table the
-    stream also lands into — ``append`` restricts it to the store's
-    node set, and it is re-read fresh each epoch so earlier epochs'
-    vectors are visible to later ones."""
-    from beyond_vector_search_spark.operators.similarity import KnnGraphIndex
-
-    spark = vec_batch.sparkSession
-    marker = _batch_marker(store_path, batch_id)
-    if fsutil.exists(spark, marker):
-        return False
-    KnnGraphIndex.append(
-        spark,
-        store_path,
-        base_embeddings,
-        vec_batch,
-        id_col=id_col,
-        vec_col=vec_col,
-        batch_id=batch_id + 1,
-        **extend_kw,
-    )
-    _write_marker(
-        spark, marker, {"batch_id": batch_id, "n_vecs": vec_batch.count()}
-    )
-    return True
-
-
-def start_graph_ingest(
-    vec_stream: DataFrame,
-    store_path: str,
-    *,
-    base_embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    trigger: dict | None = None,
-    checkpoint: str | None = None,
-    **extend_kw,
-):
-    """Start a streaming kNN-graph maintenance query: tail a streaming
-    embeddings DataFrame and keep the persisted :class:`KnnGraphIndex`
-    at ``store_path`` current (readStream → foreachBatch →
-    :func:`append_graph_batch`) — :func:`start_vector_ingest` for the
-    graph-ANN backbone.  Serving jobs observe the extended graph on
-    their next ``load``.  ``base_embeddings`` is the corpus embeddings
-    table covering every ingested vector (structure-only store); a
-    drained stream equals the same batches applied by in-session
-    ``nndescent_extend`` (pinned by test)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        append_graph_batch(
-            batch_df,
-            batch_id,
-            store_path,
-            base_embeddings=base_embeddings,
-            id_col=id_col,
-            vec_col=vec_col,
-            **extend_kw,
-        )
-
-    w = vec_stream.writeStream.foreachBatch(sink).outputMode("append")
-    if trigger:
-        w = w.trigger(**trigger)
-    w = w.option(
-        "checkpointLocation", checkpoint or os.path.join(store_path, "_checkpoint")
-    )
-    return w.start()
+    return _start(vec_stream, sink, store_path, trigger, checkpoint)
 
 
 def dedup_ingest_batch(
@@ -822,11 +728,7 @@ def start_dedup_ingest(
             max_bucket_size=max_bucket_size,
         )
 
-    w = doc_stream.writeStream.foreachBatch(sink).outputMode("append")
-    if trigger:
-        w = w.trigger(**trigger)
-    w = w.option("checkpointLocation", checkpoint or os.path.join(path, "_checkpoint"))
-    return w.start()
+    return _start(doc_stream, sink, path, trigger, checkpoint)
 
 
 def append_graph_batch(
@@ -929,10 +831,4 @@ def start_graph_ingest(
             **extend_kw,
         )
 
-    w = vec_stream.writeStream.foreachBatch(sink).outputMode("append")
-    if trigger:
-        w = w.trigger(**trigger)
-    w = w.option(
-        "checkpointLocation", checkpoint or os.path.join(store_path, "_checkpoint")
-    )
-    return w.start()
+    return _start(vec_stream, sink, store_path, trigger, checkpoint)

@@ -159,16 +159,17 @@ def test_compiled_filter_pushes_into_parquet_scan(spark, docs_index, qdf, tmp_pa
 
 
 def test_compiled_tokenization_matches_spark_exprs(spark, docs_index):
-    """compile_query_batch tokenizes/shingles DRIVER-side (the Arrow
-    kernel regexes); this pins the derived term and gram-tf sets equal
-    to the Spark expression forms over adversarial strings — unicode,
-    emoji, hyphen/underscore joins, whitespace runs, empties."""
+    """compile_query_batch tokenizes/shingles DRIVER-side through
+    kernels.tokens / kernels.char_grams, the one Python definition the
+    Arrow index kernels share; this pins the derived term and gram-tf
+    sets equal to the Spark expression forms over adversarial strings —
+    unicode, emoji, hyphen/underscore joins, whitespace runs, empties."""
     from collections import Counter
 
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from beyond_vector_search_spark.functions.kernels import _TOKEN_RE, _WS_RE
+    from beyond_vector_search_spark.functions.kernels import char_grams, tokens
 
     @settings(max_examples=25, deadline=None)
     @given(
@@ -197,7 +198,7 @@ def test_compiled_tokenization_matches_spark_exprs(spark, docs_index):
                 if r["t"] is not None
             }
         )
-        got_terms = sorted({t.lower() for t in _TOKEN_RE.findall(text)})
+        got_terms = sorted(set(tokens(text)))
         assert got_terms == want_terms, (text, got_terms, want_terms)
 
         from beyond_vector_search_spark.functions.text import char_ngrams
@@ -207,13 +208,7 @@ def test_compiled_tokenization_matches_spark_exprs(spark, docs_index):
             for r in qdf.select(F.explode_outer(char_ngrams("query", 4)).alias("g")).collect()
             if (g := r["g"]) is not None
         )
-        s = _WS_RE.sub(" ", text.lower()).strip(" ")
-        if not s:
-            grams = []
-        elif len(s) < 4:
-            grams = [s]
-        else:
-            grams = [s[i : i + 4] for i in range(len(s) - 3)]
+        grams = char_grams(text, 4)
         assert Counter(grams) == want_grams, (text, grams, dict(want_grams))
 
     check()

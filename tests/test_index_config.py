@@ -216,41 +216,3 @@ def test_delta_remove_and_replace_equals_rebuild(spark, ref_corpus, ref_index):
         g, e = getattr(got2, field), getattr(expect2, field)
         assert g.exceptAll(e).count() == 0, field
         assert e.exceptAll(g).count() == 0, field
-
-
-def test_build_delta_fused_matches_two_kernel_build(spark):
-    """The fused single-text-pass builder (build_delta_fused: one
-    kernel emitting tagged term+gram rows, checkpointed, sliced on
-    kind) produces relation-for-relation identical rows to the
-    two-kernel build_delta path — including dl denormalization,
-    empty/short-text edge docs, and the coalesced partition target."""
-    from pyspark.sql import functions as F
-
-    from beyond_vector_search_spark.operators.corpus_index import (
-        build_delta,
-        build_delta_fused,
-    )
-    from beyond_vector_search_spark.sources.readers import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    )
-    edge = spark.createDataFrame(
-        [(900001, ""), (900002, "ab"), (900003, None), (900004, "  x  ")],
-        "doc_id long, text string",
-    )
-    docs = docs.unionByName(edge)
-    base = build_delta(docs, text="text", cache=False).checkpoint(target_partitions=2)
-    fused = build_delta_fused(docs, text="text", target_partitions=2)
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    for f in ("postings", "gram_tf", "doc_ids"):
-        assert rows(getattr(fused, f)) == rows(getattr(base, f)), f
-    assert fused.postings.columns == base.postings.columns
-    assert fused.gram_tf.columns == base.gram_tf.columns
-    # kind slices are narrow over the checkpointed blocks: no second
-    # text scan in either consumer's plan
-    plan = fused.postings._jdf.queryExecution().executedPlan().toString()
-    assert "mapInPandas" not in plan.lower()
