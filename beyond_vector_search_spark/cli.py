@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import tempfile
 
 from pyspark.sql import functions as F
@@ -20,12 +19,15 @@ from pyspark.sql import functions as F
 from beyond_vector_search_spark.operators.answer import generate_answers
 from beyond_vector_search_spark.operators.corpus_index import CorpusIndex, build_index
 from beyond_vector_search_spark.operators.evaluate import evaluate_all
+from beyond_vector_search_spark.operators.fusion import mmr_rerank, rrf_scores
+from beyond_vector_search_spark.operators.retrieval import stable_topk
 from beyond_vector_search_spark.operators.router import (
     STATE_KEY,
     RouterState,
     query_features,
     route,
 )
+from beyond_vector_search_spark.operators.serving import ServingArms
 from beyond_vector_search_spark.sources.readers import load_corpus, load_labels
 from beyond_vector_search_spark.sources.telemetry import telemetry_from_env
 from beyond_vector_search_spark.session import get_spark
@@ -63,107 +65,54 @@ def cmd_run(args) -> dict:
     store = telemetry_from_env(spark, args.db or tempfile.mkdtemp(prefix="bvs_telemetry_"))
 
     state = RouterState.from_json(store.get_state(STATE_KEY, RouterState().to_json()))
-    queries = spark.createDataFrame([("q", args.query)], "query_id STRING, query STRING")
-    routed = route(query_features(queries, idx.term_stats), state).collect()[0]
+    # every arm serves through ONE ServingArms: compiled literal-fold
+    # scoring (join-form fallback), arms cached until the block exits
+    with ServingArms(idx, [("q", args.query)]) as arms:
+        queries = arms.queries_df()
+        routed = route(query_features(queries, idx.term_stats), state).collect()[0]
 
-    # --strategy auto (default) = the reference behavior: the learned
-    # router picks the arm.  Explicit names override it; rrf/mmr are
-    # the engine's fusion extensions (operators/fusion.py).
-    strategy = routed.strategy if args.strategy == "auto" else args.strategy
-    if strategy == "all":
-        # every arm's top-k from ONE action (the r13 tagged-union
-        # serving fold); the answer/telemetry flow needs a single arm,
-        # so this mode reports the trio table and the router's pick
-        from beyond_vector_search_spark.operators.retrieval import (
-            compile_query_batch,
-            compiled_bm25_scores,
-            compiled_vector_scores,
-            search_all_tagged,
-        )
+        # --strategy auto (default) = the reference behavior: the learned
+        # router picks the arm.  Explicit names override it; rrf/mmr are
+        # the engine's fusion extensions (operators/fusion.py).
+        strategy = routed.strategy if args.strategy == "auto" else args.strategy
+        if strategy == "all":
+            # every arm's top-k from ONE action (the tagged-union serving
+            # fold); the answer/telemetry flow needs a single arm, so
+            # this mode reports the trio table and the router's pick
+            rows = sorted(arms.tagged_topk(args.k).collect(), key=lambda r: (r.arm, r.rank))
+            return {
+                "query": args.query,
+                "strategy": "all",
+                "routed_strategy": routed.strategy,
+                "top_k": {
+                    arm: [
+                        {"doc_id": r.doc_id, "score": r.score}
+                        for r in rows
+                        if r.arm == arm
+                    ]
+                    for arm in ("keyword", "vector", "hybrid")
+                },
+            }
+        if strategy == "rrf":
+            tops = stable_topk(rrf_scores(arms.as_dict()), args.k)
+        elif strategy == "mmr":
+            cand = arms.topk("vector", max(3 * args.k, 12)).select(
+                "query_id", "doc_id", "score"
+            )
+            tops = mmr_rerank(cand, idx, k=args.k).select(
+                "query_id",
+                "doc_id",
+                F.col("mmr_score").alias("score"),
+                F.col("mmr_rank").alias("rank"),
+            )
+        else:
+            tops = arms.topk(strategy, args.k)
+        ans = generate_answers(tops, docs, queries).collect()[0]
+        top_rows = sorted(tops.collect(), key=lambda r: r.rank)
 
-        compiled = compile_query_batch([("q", args.query)], idx)
-        key = compiled_bm25_scores(idx, compiled, queries=queries)
-        vec = compiled_vector_scores(idx, compiled, queries=queries)
-        rows = sorted(
-            search_all_tagged(
-                queries, idx, k=args.k, keyword=key, vector=vec
-            ).collect(),
-            key=lambda r: (r.arm, r.rank),
-        )
-        return {
-            "query": args.query,
-            "strategy": "all",
-            "routed_strategy": routed.strategy,
-            "top_k": {
-                arm: [
-                    {"doc_id": r.doc_id, "score": r.score}
-                    for r in rows
-                    if r.arm == arm
-                ]
-                for arm in ("keyword", "vector", "hybrid")
-            },
-        }
-    if strategy == "rrf":
-        from pyspark.sql import functions as _F
-
-        from beyond_vector_search_spark.operators.fusion import rrf_scores
-        from beyond_vector_search_spark.operators.retrieval import (
-            bm25_scores,
-            stable_topk,
-            vector_scores,
-        )
-
-        fused = rrf_scores(
-            {"keyword": bm25_scores(queries, idx), "vector": vector_scores(queries, idx)}
-        )
-        tops = stable_topk(fused, args.k)
-    elif strategy == "mmr":
-        from pyspark.sql import functions as _F
-
-        from beyond_vector_search_spark.operators.fusion import mmr_rerank
-        from beyond_vector_search_spark.operators.retrieval import (
-            stable_topk,
-            vector_scores,
-        )
-
-        cand = stable_topk(vector_scores(queries, idx), max(3 * args.k, 12)).select(
-            "query_id", "doc_id", "score"
-        )
-        tops = mmr_rerank(cand, idx, k=args.k).select(
-            "query_id",
-            "doc_id",
-            _F.col("mmr_score").alias("score"),
-            _F.col("mmr_rank").alias("rank"),
-        )
-    else:
-        # single-query interactive serving = the COMPILED low-latency
-        # path (retrieval.compile_query_batch): the query's term/gram
-        # weights fold into the plan as literals and scoring is one
-        # scan-prunable IN-filtered pass — identical results to the
-        # join-form search_all (parity-pinned), fewer stages per run.
-        from beyond_vector_search_spark.operators.retrieval import (
-            compile_query_batch,
-            compiled_bm25_scores,
-            compiled_vector_scores,
-            hybrid_scores,
-            stable_topk,
-        )
-
-        compiled = compile_query_batch([("q", args.query)], idx)
-        key = compiled_bm25_scores(idx, compiled, queries=queries)
-        vec = compiled_vector_scores(idx, compiled, queries=queries)
-        scored = {
-            "keyword": key,
-            "vector": vec,
-            "hybrid": hybrid_scores(
-                queries, idx, keyword=key, vector=vec, minmax_via="window"
-            ),
-        }[strategy]
-        tops = stable_topk(scored, args.k)
-    ans = generate_answers(tops, docs, queries).collect()[0]
-    top_rows = sorted(tops.collect(), key=lambda r: r.rank)
-
-    lab = {r.query: r for r in labels.collect()}.get(args.query)
+    # the last label with this query text wins (the reference's dict rule)
+    matches = labels.where(F.col("query") == args.query).collect()
+    lab = matches[-1] if matches else None
     score = 0.0
     if lab is not None:
         hit = 1.0 if lab.expected_doc_id in ans.top_doc_ids else 0.0
@@ -271,8 +220,6 @@ def cmd_tokenizer(args) -> dict:
     reload with ``bpe.load_merges`` for segmentation.  ``--stats``
     additionally reports the top pieces of the trained vocabulary
     applied back to the corpus (the post-training sanity report)."""
-    from pyspark.sql import functions as F
-
     from beyond_vector_search_spark.operators import bpe
 
     spark = get_spark("bvs-tokenizer")
@@ -323,10 +270,6 @@ def cmd_index(args) -> dict:
     (``save_bucketed`` — co-bucketed readers skip the scoring-join
     shuffles entirely; requires a persistent Hive metastore, so the
     session is started with hive support when set)."""
-    from pyspark.sql import functions as F
-
-    from beyond_vector_search_spark.operators.corpus_index import build_index
-
     if not args.out and not args.bucketed_db:
         raise SystemExit("index: nothing to do — pass --out and/or --bucketed-db")
     spark = get_spark("bvs-index", hive=bool(args.bucketed_db))

@@ -735,7 +735,6 @@ def search_all_tagged(
     cfg: EngineConfig = DEFAULT,
     keyword: DataFrame | None = None,
     vector: DataFrame | None = None,
-    minmax_via: str = "window",
 ) -> DataFrame:
     """(arm, query_id, doc_id, score, rank) — ALL THREE strategies'
     top-k in ONE relation, so one action serves the whole trio.
@@ -752,12 +751,15 @@ def search_all_tagged(
     (strategy-tagged answers).  Per-arm rows are exactly
     :func:`search_all`'s (pinned by test).
 
-    Pass CACHED arm score relations (``keyword``/``vector`` — the
-    ServingArms / plans._scores serving profile) so each arm's plan
-    executes once; with the defaults the uncached arm plans appear
-    both in the union and inside the hybrid blend, which is correct
-    but re-executes them (the search_all caching note applies
-    doubly).
+    Pass CACHED arm score relations (``keyword``/``vector`` — what
+    :meth:`operators.serving.ServingArms.tagged_topk` does) so each
+    arm's plan executes once; with the defaults the uncached arm plans
+    appear both in the union and inside the hybrid blend, which is
+    correct but re-executes them (the search_all caching note applies
+    doubly).  The hybrid blend always takes its min-max bounds as
+    windows (``minmax_via="window"``): inside the blend each arm plan
+    appears once, where the agg form would reference it twice (bounds
+    agg + join probe).
 
     Regime note (measured at 50k docs): each arm relation has TWO
     consumers inside the one action (the union and the blend), and a
@@ -774,7 +776,7 @@ def search_all_tagged(
     key = keyword if keyword is not None else bm25_scores(queries, index, cfg=cfg)
     vec = vector if vector is not None else vector_scores(queries, index, cfg=cfg)
     hyb = hybrid_scores(
-        queries, index, cfg=cfg, keyword=key, vector=vec, minmax_via=minmax_via
+        queries, index, cfg=cfg, keyword=key, vector=vec, minmax_via="window"
     )
     cols = ["query_id", "doc_id", "score"]
     tagged = (

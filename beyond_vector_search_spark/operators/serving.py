@@ -5,18 +5,18 @@ the cached relation.
 Motivation (SCALING.jsonl, rounds 5-6): the fusion family — RRF, PRF,
 MMR — and the ranking-metrics/LTR exports each need one or more of the
 keyword/vector/hybrid score relations.  Called naively, every operator
-re-derives its arms from the index (4-7 s each at 50k-100k docs), while
-the catalog's `hybrid_topk` serves in well under a second from its
-session-local `_scores` memo.  This module lifts that memo out of the
-plans layer into a public operator surface, so any deployment gets the
-single-scan shape: ONE arm build per (index snapshot, query batch),
-then every fusion/rerank/export call is pure post-processing of cached
-rows.
+re-derives its arms from the index (4-7 s each at 50k-100k docs); held
+here, a deployment gets the single-scan shape: ONE arm build per
+(index snapshot, query batch), then every fusion/rerank/export call is
+pure post-processing of cached rows.
 
-The arm relations are the same objects the catalog oracles pin
-(compiled_bm25_scores / compiled_vector_scores / hybrid_scores), so
-serving through ``ServingArms`` cannot change any result — only how
-often the arm plans execute.
+This is the one place where a query batch becomes arm score
+relations: ``cli run`` serves every strategy through one
+``ServingArms``, and the catalog's session memo
+(``plans/entry_queries._scores``) holds one per scale-factor
+directory, so the arms the catalog oracles pin
+(compiled_bm25_scores / compiled_vector_scores / hybrid_scores) are
+the arms every serving caller reads.
 
 Reference note: the reference engine rebuilds its whole in-memory index
 per process and re-scores per call (run.py:18-23, retrievers.py); an

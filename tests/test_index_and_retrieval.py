@@ -8,13 +8,14 @@ import math
 import pytest
 
 from beyond_vector_search_spark.operators.retrieval import search_all
-from tests.ref_impl import ref_data, ref_index, ref_retrievers
 
 TOL = 1e-9
 
 
 @pytest.fixture(scope="module")
 def ref_objects():
+    from tests.ref_impl import ref_data, ref_index, ref_retrievers
+
     docs = ref_data.load_corpus()
     stats = ref_index.build_corpus_stats(docs, rare_df_threshold=1)
     vec = ref_retrievers.VectorRetriever.build(docs, stats)
@@ -65,6 +66,8 @@ def test_gram_index_parity(ref_index, ref_objects):
 def test_search_parity_all_labels_all_strategies(spark, ref_index, ref_objects):
     """Top-5 (doc_id, score, rank) for all 14 label queries × 3 strategies
     must match the reference exactly (same docs, same order, same scores)."""
+    from tests.ref_impl import ref_data
+
     _, _, vec, key, hyb = ref_objects
     labels = ref_data.load_labels()
     queries = spark.createDataFrame(

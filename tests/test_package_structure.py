@@ -38,3 +38,23 @@ def test_no_module_defines_a_top_level_name_twice():
             else:
                 first[name] = line
     assert not dups, "top-level names defined twice:\n" + "\n".join(dups)
+
+
+def test_only_serving_arms_compiles_query_batches():
+    """``operators/serving.ServingArms`` is the one place a query batch
+    becomes compiled arm score relations; every other caller serves
+    through it (``operators/retrieval.py`` defines the compiler)."""
+    names = {"compile_query_batch", "compiled_bm25_scores", "compiled_vector_scores"}
+    allowed = {PACKAGE / "operators" / "retrieval.py", PACKAGE / "operators" / "serving.py"}
+    calls = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path in allowed:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if name in names:
+                calls.append(f"{path.relative_to(PACKAGE.parent)}:{node.lineno}: {name}")
+    assert not calls, "compiled-arm calls outside ServingArms:\n" + "\n".join(calls)

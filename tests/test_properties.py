@@ -8,7 +8,6 @@ import re
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from tests.ref_impl import ref_retrievers, ref_text
 
 TEXTS = st.text(
     alphabet=st.characters(
@@ -44,6 +43,7 @@ def _batch(spark, samples, col_fn):
 
 def test_tokenize_property_parity(spark):
     from beyond_vector_search_spark.functions.text import tokenize
+    from tests.ref_impl import ref_text
 
     bank = _Bank()
     _collect(bank)
@@ -55,6 +55,7 @@ def test_tokenize_property_parity(spark):
 
 def test_char_ngrams_property_parity(spark):
     from beyond_vector_search_spark.functions.text import char_ngrams
+    from tests.ref_impl import ref_retrievers
 
     bank = _Bank()
     _collect(bank)
@@ -66,6 +67,7 @@ def test_char_ngrams_property_parity(spark):
 
 def test_join_top_sentences_property_parity(spark):
     from beyond_vector_search_spark.functions.text import join_top_sentences
+    from tests.ref_impl import ref_text
 
     bank = _Bank()
     _collect(bank)

@@ -157,8 +157,8 @@ def test_oversized_dataframe_batch_bounded_collect(spark, corpus_index):
 def test_entry_hybrid_blend_memoized(spark):
     """The catalog's hybrid blend is built ONCE per (session, sf): repeat
     hybrid_topk calls rank over the same cached relation instead of
-    re-running the two normalization windows + union/agg (the
-    ServingArms "hybrid" arm shape, lifted into the plans layer)."""
+    re-running the two normalization bounds + union/agg (the memo
+    holds one ServingArms per sf; this is its "hybrid" arm)."""
     from beyond_vector_search_spark.plans import entry_queries as eq
     from tests.conftest import SF_DIR
 
@@ -246,7 +246,9 @@ def test_snapshot_dir_env_build_save_then_load(spark, tmp_path, monkeypatch):
         # simulate a later serving process: clear this corpus's memos
         for k in [k for k in list(memo) if isinstance(k, tuple) and sf in k]:
             old = memo.pop(k)
-            if hasattr(old, "is_cached") and old.is_cached:
+            if isinstance(old, ServingArms):
+                old.release()
+            elif hasattr(old, "is_cached") and old.is_cached:
                 old.unpersist()
         loaded = eq._docs_index(spark, sf)
         assert getattr(loaded, "_flat", False), "second call must load"
@@ -436,3 +438,77 @@ def test_search_all_tagged_edge_queries(spark, corpus_index):
     assert all(r["score"] == 0.0 for r in e1kw)
     kw.unpersist()
     vec.unpersist()
+
+
+def test_cmd_run_every_strategy_matches_join_form(spark, tmp_path):
+    """``cli run`` for every ``--strategy`` on an in-test corpus: top_k
+    (doc ids, scores at 6 decimals) equals the join-form reference —
+    search_all's arms, RRF over the join-form keyword/vector scores,
+    and MMR over the join-form vector top-12.  The labels file carries
+    the query twice: the last label with that text wins."""
+    import argparse
+    import json
+
+    from beyond_vector_search_spark.cli import cmd_run
+    from beyond_vector_search_spark.operators.fusion import mmr_rerank, rrf_scores
+    from beyond_vector_search_spark.sources.readers import load_corpus
+
+    texts = [
+        ("spark join tuning", "Broadcast joins avoid a shuffle of the large side."),
+        ("join performance", "Sort merge join performance depends on skew."),
+        ("vector index", "A hash index scan finds vector neighbours fast."),
+        ("query filters", "Slow query filter pushdown into parquet scans."),
+        ("spark shuffle", "Shuffle partitions and spark join strategies."),
+        ("caching", "Cache the spark dataframe before repeated joins."),
+        ("tokenizers", "Character grams make a vector of the text."),
+        ("performance", "Performance tuning of spark join performance."),
+        ("unrelated", "Gardening notes about tomatoes and basil."),
+        ("spark join tuning", "Broadcast joins avoid a shuffle of the large side."),
+    ]
+    corpus = tmp_path / "corpus.jsonl"
+    corpus.write_text("".join(
+        json.dumps({"doc_id": f"D{i:02d}", "title": t, "text": x}) + "\n"
+        for i, (t, x) in enumerate(texts)
+    ))
+    query, k = "spark join performance", 3
+    labels = tmp_path / "labels.jsonl"
+    labels.write_text("".join(json.dumps(r) + "\n" for r in [
+        {"query_id": "L1", "query": query, "expected_doc_id": "D01", "expected_answer": "x"},
+        {"query_id": "L2", "query": "vector index", "expected_doc_id": "D02", "expected_answer": "y"},
+        {"query_id": "L3", "query": query, "expected_doc_id": "D07", "expected_answer": "z"},
+    ]))
+
+    idx = build_index(load_corpus(spark, str(corpus)), text=F.concat_ws(" ", "title", "text"))
+    qdf = spark.createDataFrame([("q", query)], "query_id STRING, query STRING")
+    ref = rt.search_all(qdf, idx, k=k)
+    ref["rrf"] = rt.stable_topk(
+        rrf_scores({"keyword": rt.bm25_scores(qdf, idx), "vector": rt.vector_scores(qdf, idx)}), k
+    )
+    ref["mmr"] = mmr_rerank(
+        rt.stable_topk(rt.vector_scores(qdf, idx), 12).select("query_id", "doc_id", "score"),
+        idx,
+        k=k,
+    ).select("doc_id", F.col("mmr_score").alias("score"), F.col("mmr_rank").alias("rank"))
+
+    def top(rows):
+        return [(r["doc_id"], round(r["score"], 6)) for r in rows]
+
+    want = {name: top(sorted(df.collect(), key=lambda r: r.rank)) for name, df in ref.items()}
+
+    def run(strategy):
+        return cmd_run(argparse.Namespace(
+            query=query, k=k, strategy=strategy, corpus=str(corpus), labels=str(labels),
+            db=str(tmp_path / f"db_{strategy}"), index_dir=None, index_format="parquet",
+        ))
+
+    for strategy in ("auto", "keyword", "vector", "hybrid", "rrf", "mmr"):
+        out = run(strategy)
+        if strategy != "auto":
+            assert out["strategy"] == strategy
+        assert top(out["top_k"]) == want[out["strategy"]], strategy
+        assert out["labeled"] and out["expected_doc_id"] == "D07", strategy
+    out = run("all")
+    assert out["strategy"] == "all"
+    assert out["routed_strategy"] in ("keyword", "vector", "hybrid")
+    for arm in ("keyword", "vector", "hybrid"):
+        assert top(out["top_k"][arm]) == want[arm], arm

@@ -10,7 +10,6 @@ from beyond_vector_search_spark.functions.text import (
     norm_answer,
     tokenize,
 )
-from tests.ref_impl import ref_text, ref_retrievers
 
 SAMPLES = [
     "Need details on INC-49217 now",
@@ -32,18 +31,24 @@ def _run_expr(spark, col_expr, values):
 
 
 def test_tokenize_matches_reference(spark):
+    from tests.ref_impl import ref_text
+
     got = _run_expr(spark, tokenize, SAMPLES)
     want = [ref_text.tokenize(s) for s in SAMPLES]
     assert got == want
 
 
 def test_char_ngrams_matches_reference(spark):
+    from tests.ref_impl import ref_retrievers
+
     got = _run_expr(spark, char_ngrams, SAMPLES)
     want = [ref_retrievers._char_ngrams(s, n=4) for s in SAMPLES]
     assert got == want
 
 
 def test_join_top_sentences_matches_reference(spark):
+    from tests.ref_impl import ref_text
+
     got = _run_expr(spark, join_top_sentences, SAMPLES)
     want = [ref_text.join_top_sentences(s, max_sentences=2) for s in SAMPLES]
     assert got == want
@@ -60,6 +65,8 @@ def test_norm_answer_matches_reference(spark):
 
 def test_tokenize_on_corpus(spark, ref_corpus):
     """Full-corpus tokenization parity (200 docs)."""
+    from tests.ref_impl import ref_text
+
     rows = ref_corpus.select(
         "doc_id", tokenize(F.concat_ws(" ", "title", "text")).alias("toks")
     ).collect()

@@ -158,13 +158,14 @@ def _query_suite(spark, idx, queries_df) -> dict:
     from beyond_vector_search_spark.operators import retrieval as rt
     from beyond_vector_search_spark.plans.entry_queries import _CFG, QUERY_SET, _ranked
 
-    # the compiled serving path (entry_queries._scores shape): the
+    # the compiled serving path (the arms ServingArms builds, spelled
+    # out step by step so each fill lands in its own timed row): the
     # query batch folds into the plan as literals, and the two arm
-    # score relations are CACHED exactly as the engine's serving
-    # profile caches them (_scores / ServingArms fill arm caches once
-    # per workload; every later consumer reads them) — bm25 pays the
-    # keyword fill, vector the vector fill, hybrid blends the cached
-    # arms, each arm executing once across the trio
+    # score relations are CACHED as ServingArms caches them (arm caches
+    # fill once per workload; every later consumer reads them) — bm25
+    # pays the keyword fill, vector the vector fill, hybrid blends the
+    # cached arms (window-form bounds, as in the recorded rows), each
+    # arm executing once across the trio
     out: dict = {}
     # ONE-ACTION trio (r13): the three strategies' top-k as a single
     # tagged-union relation (rt.search_all_tagged — one job, one
