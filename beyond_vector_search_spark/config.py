@@ -33,7 +33,6 @@ class EngineConfig:
     k: int = 5
     lr: float = 0.25
     max_context_chars: int = 900
-    max_sentences: int = 2
 
     # Scale knobs (not present in the single-process reference).
     # include_zero_score_docs: the reference scores *every* doc per query
@@ -48,7 +47,6 @@ class EngineConfig:
     # carry the least idf weight, so ranking impact is minimal and the
     # join skew disappears at the source.
     max_gram_df_ratio: float | None = None
-    shuffle_partitions: int = 32
     # index_kernel: how the (doc_id, term/gram, tf) relations are built.
     # "arrow"  — mapInPandas counting kernels (functions/kernels.py):
     #            ~4x faster than the expression path because Spark

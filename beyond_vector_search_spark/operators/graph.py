@@ -47,7 +47,6 @@ def knn_edges(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: bool = True,
 ) -> DataFrame:
     """(src, dst) — the exact cosine kNN digraph over an embedding
     relation (self-matches excluded, ties broken by rounded-cos DESC,
@@ -59,9 +58,7 @@ def knn_edges(
     q = embeddings.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("embedding")
     )
-    nn = sim.knn_bruteforce(
-        embeddings, q, id_col=id_col, vec_col=vec_col, k=k, kernel=kernel
-    )
+    nn = sim.knn_bruteforce(embeddings, q, id_col=id_col, vec_col=vec_col, k=k)
     return nn.select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
 
 

@@ -1,16 +1,36 @@
 """Similarity search over dense embedding columns.
 
-Two paths, same result schema:
+Operator families (deterministic: scores rounded to 6 decimals, ties
+broken by id):
 
-- ``knn_bruteforce`` — exact: broadcast the (small) query set against
-  the full embedding table; per-row sequential-fold cosine (bit-equal
-  with the DuckDB oracle); deterministic top-k.  The scan side stays
-  partitioned — at 100 TB this is a single pass, no shuffle of the
-  corpus, only the per-query top-k aggregation moves data.
-- ``ivf_topk`` — the scale path: embeddings are pre-assigned to their
-  nearest centroid (one pass); queries probe only ``nprobe`` centroid
-  buckets, cutting the scan by ~K/nprobe.  Approximate, but the
-  approximation is deterministic, so the oracle reproduces it exactly.
+- brute force — ``knn_bruteforce``, ``knn_quantized_topk`` (int8),
+  ``knn_dual_topk`` (both precisions, one pass), ``filtered_knn_topk``;
+- IVF — ``assign_centroids``, ``ivf_topk``, ``train_ivf_centroids``;
+- PQ — ``pq_codebooks`` / ``pq_encode`` / ``pq_topk`` (ADC, optional
+  exact rerank), ``pq_search_codes`` / ``PQIndex`` (serve stored
+  codes), ``ivfpq_topk``, ``ivfpq_residual_topk`` / ``IVFPQIndex``,
+  OPQ (``opq_train``, ``opq_topk``);
+- graph ANN — ``nndescent_knn_graph``, ``graph_ann_topk``,
+  ``KnnGraphIndex``; plus ``lsh_ann_topk`` (MLlib) and
+  ``embedding_neardup_pairs``.
+
+Shared steps, each written once:
+
+- :func:`_scan_topk` — the query-matrix scan: queries collected into
+  the kernel closure, one score block per Arrow batch of the corpus,
+  local top-(k+16) per query, self-matches dropped.  The cosine kNN
+  kernels and both ADC scans (in-batch encode and stored codes) are
+  score-block functions over it.
+- :func:`_rank_topk` — the global (rounded score, neighbor_id)
+  ``row_number`` window; :func:`_adc_ranked` adds the optional exact
+  rerank of a PQ shortlist.
+- :func:`_pq_lut` (numpy) and :func:`_pq_expr_lut` (Spark
+  expressions) — the per-subspace squared-L2 lookup table.
+- :func:`_probe_centroids` — the cosine coarse probe of IVF / IVF-PQ.
+
+The ``kernel=False`` paths of the brute-force, assignment, encode and
+ADC operators are the lazy expression definitions the Arrow kernels are
+parity-tested against.
 """
 
 from __future__ import annotations
@@ -146,70 +166,83 @@ def _quantize_rows(M):
     return Q
 
 
-def _knn_kernel_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
+def _rank_topk(
+    scored: DataFrame,
+    col: str,
     k: int,
-    int8: bool,
+    *,
+    desc: bool = False,
+    by: tuple[str, ...] = ("query_id",),
 ) -> DataFrame:
-    """Arrow matrix-kernel brute force: the query matrix rides into a
-    ``mapInPandas`` closure (queries are small by problem definition —
-    collecting them IS the broadcast, an eager job at call time), each
-    corpus partition computes its cosine block as one BLAS matmul and
-    emits only its local top-(k+16) per query, and a window over the
-    (partitions x queries x k) survivors picks the global top-k with
-    the same rounded-cos/neighbor-id ordering as the expression path.
+    """(*by, neighbor_id, col, rank) — the global top-k window of the
+    search operators: ``round(col, 6)`` (Spark's HALF_UP) in the
+    given direction, ``neighbor_id`` ascending on ties, ``col`` emitted
+    rounded."""
+    order = F.desc if desc else F.asc
+    w = Window.partitionBy(*by).orderBy(order(F.round(F.col(col), 6)), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("integer"))
+        .where(F.col("rank") <= k)
+        .select(*by, "neighbor_id", F.round(col, 6).alias(col), "rank")
+    )
 
-    Two scale properties the expression path lacks: each corpus vector
+
+def _scan_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    scorer,
+    *,
+    col: str,
+    desc: bool,
+    k: int,
+    tag: bool = False,
+) -> DataFrame:
+    """([method,] query_id, neighbor_id, col) candidates — the one
+    query-matrix scan behind every Arrow top-k kernel (cosine kNN, int8
+    kNN, PQ ADC).  Rank them with :func:`_rank_topk`.
+
+    The query side rides into a ``mapInPandas`` closure (queries are
+    small by problem definition — collecting them IS the broadcast, an
+    eager job at call time); with no queries the result is an empty,
+    fully typed frame.  ``scorer(qvecs)`` runs on the driver with the
+    collected query vectors (lists, NULL-able, in query order) and
+    returns the per-batch function ``pdf -> {method: score block}``, a
+    block being (queries x batch rows) over ``corpus``'s (neighbor_id,
+    payload...) columns.  Each block keeps, per query, its local
+    top-(k+16) by (``np.round(score, 6)`` in the ``desc`` direction,
+    neighbor_id), self-matches dropped, and emits the block's own value.
+    ``tag=True`` adds the block name as a leading ``method`` column.
+
+    Two scale properties the expression paths lack: each corpus row
     crosses the Python boundary ONCE (not once per query pair), and the
-    rank window sees candidates, not all n x q scored pairs.  The +16
-    margin makes the in-kernel ordering (numpy round, ties broken
-    exactly) immune to half-even-vs-half-up boundary disagreements with
-    the final window's F.round."""
+    rank window sees candidates, not all n x q scored pairs."""
     import numpy as np
 
     from collections.abc import Iterator
 
-    spark = embeddings.sparkSession
-    q_schema = queries.select(F.col("query_id")).schema
-    qid_type = q_schema["query_id"].dataType.simpleString()
     qrows = queries.select(
         "query_id", as_double_array(F.col("embedding")).alias("_v")
     ).collect()
-    nid_src = embeddings.select(F.col(id_col).alias("neighbor_id"))
-    nid_type = nid_src.schema["neighbor_id"].dataType.simpleString()
-    out_schema = f"query_id {qid_type}, neighbor_id {nid_type}, cos double"
+    qid_type = queries.select("query_id").schema["query_id"].dataType.simpleString()
+    nid_type = corpus.schema["neighbor_id"].dataType.simpleString()
+    out_schema = ("method string, " if tag else "") + (
+        f"query_id {qid_type}, neighbor_id {nid_type}, {col} double"
+    )
     if not qrows:
-        return spark.createDataFrame(
-            [], out_schema + ", rank int"
-        ).select("query_id", "neighbor_id", "cos", "rank")
+        return corpus.sparkSession.createDataFrame([], out_schema)
     q_ids = [r["query_id"] for r in qrows]
-    # NULL / length-mismatched vectors coerce to zeros (cos 0.0) rather
-    # than crashing the stack — same tolerance as the expression path
-    Q, q_dim = _stack_rows([r["_v"] for r in qrows])
-    if int8:
-        Q = _quantize_rows(Q)
-    qn = np.sqrt((Q * Q).sum(axis=1))
+    score = scorer([r["_v"] for r in qrows])
     # +16 margin: candidates are cheap (per batch x query), and the
     # cushion covers numpy-half-even vs Spark-HALF_UP boundary
     # disagreements in the LOCAL ordering many times over — the global
     # window re-ranks with F.round, so only a candidate pruned here
     # could ever be missed
     take = k + 16
-
-    # NULL-id parity with the expression path (where a null id never
+    # NULL-id parity with the expression paths (where a null id never
     # survives the != / join comparisons): Arrow would coerce a null
     # bigint id batch to float64/NaN — garbage ids or executor
     # TypeErrors in the tie-break sort
-    src = _fan_out(
-        embeddings.where(F.col(id_col).isNotNull()).select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double_array(F.col(vec_col)).alias("_v"),
-        )
-    )
+    src = _fan_out(corpus.where(F.col("neighbor_id").isNotNull()))
 
     def kernel(batches: Iterator) -> Iterator:
         import pandas as pd
@@ -217,43 +250,82 @@ def _knn_kernel_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            C, _ = _stack_rows(pdf["_v"].to_numpy(), dim=q_dim)
-            if int8:
-                C = _quantize_rows(C)
-            cn = np.sqrt((C * C).sum(axis=1))
-            denom = qn[:, None] * cn[None, :]
-            cos = np.where(
-                denom == 0.0, 0.0, (Q @ C.T) / np.where(denom == 0.0, 1.0, denom)
-            )
-            cr = np.round(cos, 6)
             nbr = pdf["neighbor_id"].to_numpy()
-            out_q, out_n, out_c = [], [], []
-            for qi, qid in enumerate(q_ids):
-                row_c, row_r = cos[qi], cr[qi]
-                order = sorted(
-                    (j for j in range(len(nbr)) if nbr[j] != qid),
-                    key=lambda j: (-row_r[j], nbr[j]),
-                )[:take]
-                for j in order:
-                    out_q.append(qid)
-                    out_n.append(nbr[j])
-                    out_c.append(row_c[j])
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_q),
-                    "neighbor_id": pd.Series(out_n, dtype=pdf["neighbor_id"].dtype),
-                    "cos": pd.Series(out_c, dtype="float64"),
-                }
-            )
+            out_m, out_q, out_n, out_s = [], [], [], []
+            for method, S in score(pdf).items():
+                R = np.round(S, 6)
+                if desc:
+                    R = -R
+                for qi, qid in enumerate(q_ids):
+                    row_s, row_r = S[qi], R[qi]
+                    order = sorted(
+                        (j for j in range(len(nbr)) if nbr[j] != qid),
+                        key=lambda j: (row_r[j], nbr[j]),
+                    )[:take]
+                    for j in order:
+                        out_q.append(qid)
+                        out_n.append(nbr[j])
+                        out_s.append(row_s[j])
+                    if tag:
+                        out_m += [method] * len(order)
+            out = {
+                "query_id": pd.Series(out_q),
+                "neighbor_id": pd.Series(out_n, dtype=pdf["neighbor_id"].dtype),
+                col: pd.Series(out_s, dtype="float64"),
+            }
+            yield pd.DataFrame({"method": pd.Series(out_m), **out} if tag else out)
 
-    cand = src.mapInPandas(kernel, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cos"), 6)), F.asc("neighbor_id")
+    return src.mapInPandas(kernel, out_schema)
+
+
+def _knn_kernel_topk(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    *,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    methods: tuple[str, ...] = ("exact",),
+) -> DataFrame:
+    """Arrow matrix-kernel brute force over :func:`_scan_topk`: each
+    corpus batch computes its cosine block per method ('exact' float64,
+    'int8' quantized — :func:`_quantize_rows`) as one BLAS matmul, and
+    :func:`_rank_topk` picks the global top-k with the same
+    rounded-cos/neighbor-id ordering as the expression path.  Several
+    methods share the stacked batch and add a ``method`` column."""
+    import numpy as np
+
+    def scorer(qvecs):
+        # NULL / length-mismatched vectors coerce to zeros (cos 0.0)
+        # rather than crashing the stack — same tolerance as the
+        # expression path
+        Q, dim = _stack_rows(qvecs)
+        sides = {}
+        for method in methods:
+            Qm = _quantize_rows(Q) if method == "int8" else Q
+            sides[method] = (Qm, np.sqrt((Qm * Qm).sum(axis=1)))
+
+        def block(pdf):
+            C, _ = _stack_rows(pdf["_v"].to_numpy(), dim=dim)
+            out = {}
+            for method, (Qm, qn) in sides.items():
+                Cm = _quantize_rows(C) if method == "int8" else C
+                cn = np.sqrt((Cm * Cm).sum(axis=1))
+                denom = qn[:, None] * cn[None, :]
+                out[method] = np.where(
+                    denom == 0.0, 0.0, (Qm @ Cm.T) / np.where(denom == 0.0, 1.0, denom)
+                )
+            return out
+
+        return block
+
+    tag = len(methods) > 1
+    corpus = embeddings.select(
+        F.col(id_col).alias("neighbor_id"), as_double_array(F.col(vec_col)).alias("_v")
     )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("integer"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
+    cand = _scan_topk(corpus, queries, scorer, col="cos", desc=True, k=k, tag=tag)
+    return _rank_topk(
+        cand, "cos", k, desc=True, by=("method", "query_id") if tag else ("query_id",)
     )
 
 
@@ -396,9 +468,7 @@ def knn_bruteforce(
     (sequential-fold dots, fully lazy); tests pin the two identical.
     """
     if kernel:
-        return _knn_kernel_topk(
-            embeddings, queries, id_col=id_col, vec_col=vec_col, k=k, int8=False
-        )
+        return _knn_kernel_topk(embeddings, queries, id_col=id_col, vec_col=vec_col, k=k)
     qv = as_double_array(F.col("embedding"))
     q = queries.select(F.col("query_id"), qv.alias("qv"), l2_norm(qv).alias("qn"))
     cv = as_double_array(F.col(vec_col))
@@ -429,7 +499,6 @@ def filtered_knn_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    kernel: bool = True,
 ) -> DataFrame:
     """(query_id, neighbor_id, cos, rank) — exact cosine top-k under a
     metadata filter: the filtered-vector-search serving pattern
@@ -482,20 +551,10 @@ def filtered_knn_topk(
 
     if mode == "pre":
         return knn_bruteforce(
-            _survivors(embeddings),
-            queries,
-            id_col=id_col,
-            vec_col=vec_col,
-            k=k,
-            kernel=kernel,
+            _survivors(embeddings), queries, id_col=id_col, vec_col=vec_col, k=k
         )
     cand = knn_bruteforce(
-        embeddings,
-        queries,
-        id_col=id_col,
-        vec_col=vec_col,
-        k=k * oversample,
-        kernel=kernel,
+        embeddings, queries, id_col=id_col, vec_col=vec_col, k=k * oversample
     )
     kept = cand.join(
         _survivors(embeddings).select(F.col(id_col).alias("neighbor_id")),
@@ -533,19 +592,7 @@ def ivf_topk(
     reproducible — the DuckDB oracle computes the identical result.
     """
     assigned = assign_centroids(embeddings, centroids, id_col=id_col, vec_col=vec_col)
-    qv = as_double_array(F.col("embedding"))
-    q = queries.select("query_id", qv.alias("qv"), l2_norm(qv).alias("qn"))
-    ccv = as_double_array(F.col("embedding"))
-    c = centroids.select("centroid_id", ccv.alias("cv"), l2_norm(ccv).alias("cn"))
-    q_probe = _with_cos_hoisted(F.broadcast(q).crossJoin(F.broadcast(c)))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cos"), 6)), F.asc("centroid_id")
-    )
-    probed = (
-        q_probe.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "qn", "centroid_id")
-    )
+    probed = _probe_centroids(queries, centroids, nprobe)
     cands = probed.join(assigned.select(F.col("vec_id").alias("neighbor_id"), "centroid_id"), "centroid_id")
     ecv = as_double_array(F.col(vec_col))
     e = embeddings.select(
@@ -554,13 +601,28 @@ def ivf_topk(
     scored = _with_cos_arrow(cands.join(e, "neighbor_id")).where(
         F.col("query_id") != F.col("neighbor_id")
     )
+    return _rank_topk(scored, "cos", k, desc=True)
+
+
+def _probe_centroids(queries: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, qv, qn, centroid_id) — each query's ``nprobe``
+    nearest centroids by rounded cosine (desc, centroid_id asc): the
+    IVF / IVF-PQ coarse probe, the same ordering as
+    :func:`assign_centroids`.  ``queries``: (query_id, embedding);
+    ``centroids``: (centroid_id, embedding); both broadcast-sized.  The
+    query vector ``qv`` and its norm ``qn`` ride along for the caller's
+    candidate scoring."""
+    v = as_double_array(F.col("embedding"))
+    q = queries.select("query_id", v.alias("qv"), l2_norm(v).alias("qn"))
+    c = centroids.select("centroid_id", v.alias("cv"), l2_norm(v).alias("cn"))
+    scored = _with_cos_hoisted(F.broadcast(q).crossJoin(F.broadcast(c)))
     w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cos"), 6)), F.asc("neighbor_id")
+        F.desc(F.round(F.col("cos"), 6)), F.asc("centroid_id")
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
+        scored.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= nprobe)
+        .select("query_id", "qv", "qn", "centroid_id")
     )
 
 
@@ -609,14 +671,7 @@ def lsh_ann_topk(
         F.col("datasetB.neighbor_id").alias("neighbor_id"),
         F.col("dist"),
     ).where(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc(F.round(F.col("dist"), 6)), F.asc("neighbor_id")
-    )
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank")
-    )
+    return _rank_topk(joined, "dist", k)
 
 
 def embedding_neardup_pairs(
@@ -879,7 +934,7 @@ def knn_quantized_topk(
     if kernel:
         q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("embedding"))
         return _knn_kernel_topk(
-            embeddings, q, id_col=id_col, vec_col=vec_col, k=k, int8=True
+            embeddings, q, id_col=id_col, vec_col=vec_col, k=k, methods=("int8",)
         )
     # integer-exact dot and norms (bigint accumulation), float only at
     # the final normalization — bit-reproducible across engines
@@ -952,87 +1007,8 @@ def knn_dual_topk(
     methods.  Results are bit-identical to the two single-method
     kernels — pinned by test.
     """
-    import numpy as np
-
-    from collections.abc import Iterator
-
-    spark = embeddings.sparkSession
-    qrows = queries.select(
-        "query_id", as_double_array(F.col("embedding")).alias("_v")
-    ).collect()
-    nid_src = embeddings.select(F.col(id_col).alias("neighbor_id"))
-    nid_type = nid_src.schema["neighbor_id"].dataType.simpleString()
-    qid_type = queries.select("query_id").schema["query_id"].dataType.simpleString()
-    out_schema = f"method string, query_id {qid_type}, neighbor_id {nid_type}, cos double"
-    if not qrows:
-        return spark.createDataFrame([], out_schema + ", rank int")
-    q_ids = [r["query_id"] for r in qrows]
-    Q, q_dim = _stack_rows([r["_v"] for r in qrows])
-    Qq = _quantize_rows(Q)
-    qns = {
-        "exact": np.sqrt((Q * Q).sum(axis=1)),
-        "int8": np.sqrt((Qq * Qq).sum(axis=1)),
-    }
-    qmats = {"exact": Q, "int8": Qq}
-    take = k + 16  # same boundary-rounding cushion as _knn_kernel_topk
-
-    # NULL-id parity with the expression path (where a null id never
-    # survives the != / join comparisons): Arrow would coerce a null
-    # bigint id batch to float64/NaN — garbage ids or executor
-    # TypeErrors in the tie-break sort
-    src = _fan_out(
-        embeddings.where(F.col(id_col).isNotNull()).select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double_array(F.col(vec_col)).alias("_v"),
-        )
-    )
-
-    def kernel(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C, _ = _stack_rows(pdf["_v"].to_numpy(), dim=q_dim)
-            cmats = {"exact": C, "int8": _quantize_rows(C)}
-            nbr = pdf["neighbor_id"].to_numpy()
-            out_m, out_q, out_n, out_c = [], [], [], []
-            for method in ("exact", "int8"):
-                Qm, Cm, qn = qmats[method], cmats[method], qns[method]
-                cn = np.sqrt((Cm * Cm).sum(axis=1))
-                denom = qn[:, None] * cn[None, :]
-                cos = np.where(
-                    denom == 0.0, 0.0, (Qm @ Cm.T) / np.where(denom == 0.0, 1.0, denom)
-                )
-                cr = np.round(cos, 6)
-                for qi, qid in enumerate(q_ids):
-                    row_c, row_r = cos[qi], cr[qi]
-                    order = sorted(
-                        (j for j in range(len(nbr)) if nbr[j] != qid),
-                        key=lambda j: (-row_r[j], nbr[j]),
-                    )[:take]
-                    for j in order:
-                        out_m.append(method)
-                        out_q.append(qid)
-                        out_n.append(nbr[j])
-                        out_c.append(row_c[j])
-            yield pd.DataFrame(
-                {
-                    "method": pd.Series(out_m),
-                    "query_id": pd.Series(out_q),
-                    "neighbor_id": pd.Series(out_n, dtype=pdf["neighbor_id"].dtype),
-                    "cos": pd.Series(out_c, dtype="float64"),
-                }
-            )
-
-    cand = src.mapInPandas(kernel, out_schema)
-    w = Window.partitionBy("method", "query_id").orderBy(
-        F.desc(F.round(F.col("cos"), 6)), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("integer"))
-        .where(F.col("rank") <= k)
-        .select("method", "query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
+    return _knn_kernel_topk(
+        embeddings, queries, id_col=id_col, vec_col=vec_col, k=k, methods=("exact", "int8")
     )
 
 
@@ -1102,6 +1078,50 @@ def _collect_codebooks(codebooks: DataFrame):
     return out
 
 
+def _pq_lut(X, cb: dict, d: int) -> dict:
+    """{sub: (rows x n_codes) table} — ``round(||X_s - codeword||^2, 6)``
+    of every row's subspace slice against that subspace's codewords
+    (columns in code_id order; ``cb`` from :func:`_collect_codebooks`).
+    Over the queries it is the ADC lookup table; over corpus rows its
+    per-row argmin is the PQ code (first minimum = smaller code_id)."""
+    import numpy as np
+
+    out = {}
+    for s in sorted(cb):
+        M, _ = cb[s]
+        diff = X[:, s * d : (s + 1) * d][:, None, :] - M[None, :, :]
+        out[s] = np.round((diff * diff).sum(axis=2), 6)
+    return out
+
+
+def _pq_expr_lut(
+    vecs: DataFrame, codebooks: DataFrame, *, m: int, d: int, keys: tuple[str, ...]
+) -> DataFrame:
+    """(*keys, sub, code_id, d2) — the expression twin of :func:`_pq_lut`:
+    slice each ``_v`` vector of ``vecs`` (*keys, _v) into ``m``
+    subspaces, explode, broadcast-join the codebooks, and take the
+    rounded squared distance to every codeword."""
+    slices = F.array(
+        *[
+            F.struct(
+                F.lit(s).cast("int").alias("sub"), F.slice("_v", s * d + 1, d).alias("sv")
+            )
+            for s in range(m)
+        ]
+    )
+    ex = vecs.select(*keys, F.explode(slices).alias("sc")).select(
+        *keys, F.col("sc.sub").alias("sub"), F.col("sc.sv").alias("sv")
+    )
+    d2 = F.aggregate(
+        F.zip_with("sv", "codeword", lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return ex.join(F.broadcast(codebooks), "sub").select(
+        *keys, "sub", "code_id", F.round(d2, 6).alias("d2")
+    )
+
+
 def pq_encode(
     embeddings: DataFrame,
     codebooks: DataFrame,
@@ -1165,15 +1185,11 @@ def pq_encode(
                     continue
                 X, _ = _stack_rows(pdf["_v"].to_numpy(), dim=dim)
                 codes = np.zeros((len(pdf), len(subs)), dtype=np.int64)
-                for j, s in enumerate(subs):
-                    M, ids = cb[s]
-                    sl = X[:, s * d : (s + 1) * d]
-                    diff = sl[:, None, :] - M[None, :, :]
-                    d2 = np.round((diff * diff).sum(axis=2), 6)
+                for j, (s, d2) in enumerate(_pq_lut(X, cb, d).items()):
                     # argmin returns the FIRST minimum — codebook rows are
                     # ordered by code_id, so ties break small, matching
                     # the expression path's min_by struct order
-                    codes[:, j] = ids[np.argmin(d2, axis=1)]
+                    codes[:, j] = cb[s][1][np.argmin(d2, axis=1)]
                 yield pd.DataFrame(
                     {
                         "vec_id": pdf["vec_id"],
@@ -1262,17 +1278,14 @@ def pq_topk(
     (:func:`pq_encode` output — typically encoded ONCE and persisted as
     parquet, the IndexDelta/persisted-tokens pattern).  With it, the
     ADC scan reads ONLY the 8-byte code column: the raw embedding
-    relation is never touched (kernel gathers LUT entries by code id;
-    expression path joins the LUT on the exploded codes), which is the
+    relation is never touched (kernel: :func:`pq_search_codes` gathers
+    LUT entries by code id; expression path joins the LUT on the
+    exploded codes), which is the
     real 100 TB serve shape — encode is a one-off batch job, every
     query batch after it scans 32x less data.  Results are identical
     to the encode-on-the-fly form (parity-pinned): in-kernel argmin
     and :func:`pq_encode` break distance ties the same way.  ``rerank``
-    still reads raw vectors for its q x R exact pass.  Related:
-    :func:`pq_search_codes` is the PQIndex serving twin of this path —
-    same ADC-over-codes kernel shape, but null-tolerant (a persisted
-    store may carry ragged rows) where this parameter is strict
-    (ad-hoc codes should fail loudly on codebook mismatch).
+    still reads raw vectors for its q x R exact pass.
 
     ``rerank=R`` adds the standard second stage (IVFADC-with-refinement):
     ADC picks a top-R shortlist per query, then the EXACT squared-L2
@@ -1293,181 +1306,129 @@ def pq_topk(
         codebooks = pq_codebooks(
             embeddings, id_col=id_col, vec_col=vec_col, m=m, dim=dim, n_codes=n_codes
         )
-    shortlist = k if rerank is None else rerank
-    d = dim // m
-    qv = as_double_array(F.col("embedding"))
     if kernel:
-        import numpy as np
-
-        from collections.abc import Iterator
-
-        spark = embeddings.sparkSession
-        cb = _collect_codebooks(codebooks)
-        subs = sorted(cb)
-        qrows = queries.select("query_id", qv.alias("_v")).collect()
-        qid_type = queries.select("query_id").schema["query_id"].dataType.simpleString()
-        nid_src = embeddings.select(F.col(id_col).alias("neighbor_id"))
-        nid_type = nid_src.schema["neighbor_id"].dataType.simpleString()
-        out_schema = f"query_id {qid_type}, neighbor_id {nid_type}, dist double"
-        if not qrows:
-            return spark.createDataFrame([], out_schema + ", rank int")
-        q_ids = [r["query_id"] for r in qrows]
-        Q, _ = _stack_rows([r["_v"] for r in qrows], dim=dim)
-        # LUT[q][s][c] = round(||q_s - codeword_c||^2, 6) — the same
-        # rounded entries the expression path sums
-        lut = {}
-        for s in subs:
-            M, ids = cb[s]
-            sl = Q[:, s * d : (s + 1) * d]
-            diff = sl[:, None, :] - M[None, :, :]
-            lut[s] = (np.round((diff * diff).sum(axis=2), 6), ids)
-        take = shortlist + 16
-        use_codes = codes is not None
-        if use_codes:
-            src = _fan_out(
-                codes.where(F.col("vec_id").isNotNull()).select(
-                    F.col("vec_id").alias("neighbor_id"), "codes"
-                )
+        if codes is not None:
+            return pq_search_codes(
+                codes, codebooks, queries, m=m, dim=dim, k=k, rerank=rerank,
+                embeddings=embeddings, id_col=id_col, vec_col=vec_col,
             )
-            # code_id -> position in each subspace's codeword block
-            id_pos = {}
-            for s in subs:
-                _, ids = cb[s]
-                pm = np.full(int(ids.max()) + 1, -1, dtype=np.int64)
-                pm[ids] = np.arange(len(ids))
-                id_pos[s] = pm
-        else:
-            src = _fan_out(
-                embeddings.where(F.col(id_col).isNotNull()).select(
-                    F.col(id_col).alias("neighbor_id"),
-                    as_double_array(F.col(vec_col)).alias("_v"),
-                )
+        corpus = embeddings.select(
+            F.col(id_col).alias("neighbor_id"), as_double_array(F.col(vec_col)).alias("_v")
+        )
+        scored = _adc_scan(
+            corpus, queries, codebooks, m=m, dim=dim, k=k if rerank is None else rerank
+        )
+    else:
+        enc = (
+            codes
+            if codes is not None
+            else pq_encode(
+                embeddings, codebooks, id_col=id_col, vec_col=vec_col, m=m, dim=dim,
+                kernel=False,
             )
-
-        def adc_kernel(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                nbr = pdf["neighbor_id"].to_numpy()
-                dist = np.zeros((len(q_ids), len(pdf)))
-                if use_codes:
-                    # pre-encoded scan: LUT gather by code id — no
-                    # float vector math, the raw corpus is never read
-                    C = np.asarray(
-                        [list(c) for c in pdf["codes"]], dtype=np.int64
-                    )
-                    for j, s in enumerate(subs):
-                        # bounds-check BEFORE the fancy-index gather:
-                        # an out-of-range id would raise a raw numpy
-                        # IndexError (and a negative id would wrap to
-                        # a valid position) instead of the intended
-                        # descriptive error
-                        cj = C[:, j]
-                        if (cj < 0).any() or (cj >= len(id_pos[s])).any():
-                            raise ValueError(
-                                f"codes contain a code_id absent from the "
-                                f"sub={s} codebook"
-                            )
-                        pos = id_pos[s][cj]
-                        if (pos < 0).any():
-                            raise ValueError(
-                                f"codes contain a code_id absent from the "
-                                f"sub={s} codebook"
-                            )
-                        dist += lut[s][0][:, pos]
-                else:
-                    X, _ = _stack_rows(pdf["_v"].to_numpy(), dim=dim)
-                    for s in subs:
-                        M, ids = cb[s]
-                        sl = X[:, s * d : (s + 1) * d]
-                        diff = sl[:, None, :] - M[None, :, :]
-                        d2 = np.round((diff * diff).sum(axis=2), 6)
-                        code_pos = np.argmin(d2, axis=1)
-                        dist += lut[s][0][:, code_pos]
-                dr = np.round(dist, 6)
-                out_q, out_n, out_d = [], [], []
-                for qi, qid in enumerate(q_ids):
-                    row = dr[qi]
-                    order = sorted(
-                        (j for j in range(len(nbr)) if nbr[j] != qid),
-                        key=lambda j: (row[j], nbr[j]),
-                    )[:take]
-                    for j in order:
-                        out_q.append(qid)
-                        out_n.append(nbr[j])
-                        out_d.append(row[j])
-                yield pd.DataFrame(
-                    {
-                        "query_id": pd.Series(out_q),
-                        "neighbor_id": pd.Series(out_n, dtype=pdf["neighbor_id"].dtype),
-                        "dist": pd.Series(out_d, dtype="float64"),
-                    }
-                )
-
-        cand = src.mapInPandas(adc_kernel, out_schema)
-        w = Window.partitionBy("query_id").orderBy(
-            F.asc(F.round(F.col("dist"), 6)), F.asc("neighbor_id")
         )
-        ranked = (
-            cand.withColumn("rank", F.row_number().over(w).cast("integer"))
-            .where(F.col("rank") <= shortlist)
-            .select("query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank")
+        lut = _pq_expr_lut(
+            queries.select("query_id", as_double_array(F.col("embedding")).alias("_v")),
+            codebooks, m=m, d=dim // m, keys=("query_id",),
         )
-        if rerank is None:
-            return ranked
-        return _pq_exact_rerank(
-            ranked, embeddings, queries, id_col=id_col, vec_col=vec_col, k=k
+        ecx = enc.select(
+            F.col("vec_id").alias("neighbor_id"), F.posexplode("codes").alias("sub", "code_id")
         )
-    enc = (
-        codes
-        if codes is not None
-        else pq_encode(
-            embeddings, codebooks, id_col=id_col, vec_col=vec_col, m=m, dim=dim, kernel=False
+        scored = (
+            ecx.join(F.broadcast(lut), ["sub", "code_id"])
+            .where(F.col("query_id") != F.col("neighbor_id"))
+            .groupBy("query_id", "neighbor_id")
+            .agg(F.round(F.sum("d2"), 6).alias("dist"))
         )
+    return _adc_ranked(
+        scored, embeddings, queries, k=k, rerank=rerank, id_col=id_col, vec_col=vec_col
     )
-    slices = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("int").alias("sub"), F.slice("_v", s * d + 1, d).alias("sv")
+
+
+def _adc_scan(
+    corpus: DataFrame, queries: DataFrame, codebooks: DataFrame, *, m: int, dim: int, k: int
+) -> DataFrame:
+    """(query_id, neighbor_id, dist) ADC candidates over
+    :func:`_scan_topk`, ``dist`` = ``np.round`` of the summed LUT
+    entries (:func:`_pq_lut` over the queries).  ``corpus`` is either
+    (neighbor_id, codes) — stored codes, gathered by code id after a
+    bounds check (a NULL or wrong-length code row or a code_id absent
+    from the codebook raises ValueError: it has no distance) — or
+    (neighbor_id, _v) raw vectors, encoded in-batch by the same argmin
+    rule as :func:`pq_encode`."""
+    import numpy as np
+
+    d = dim // m
+    cb = _collect_codebooks(codebooks)
+    subs = sorted(cb)
+    from_codes = "codes" in corpus.columns
+    # code_id -> position in each subspace's codeword block (-1: absent)
+    id_pos = {}
+    for s in subs:
+        ids = cb[s][1]
+        id_pos[s] = np.full(int(ids.max()) + 1, -1, dtype=np.int64)
+        id_pos[s][ids] = np.arange(len(ids))
+
+    def gather_positions(codes):
+        if any(c is None or len(c) != len(subs) for c in codes):
+            raise ValueError(
+                f"codes contain a NULL row or a row without exactly {len(subs)} "
+                f"code_ids (one per sub)"
             )
-            for s in range(m)
-        ]
-    )
-    qx = queries.select(F.col("query_id"), qv.alias("_v")).select(
-        "query_id", F.explode(slices).alias("sc")
-    ).select("query_id", F.col("sc.sub").alias("sub"), F.col("sc.sv").alias("sv"))
-    lut_d2 = F.round(
-        F.aggregate(
-            F.zip_with("sv", "codeword", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    lut = qx.join(F.broadcast(codebooks), "sub").select(
-        "query_id", "sub", "code_id", lut_d2.alias("d2")
-    )
-    ecx = enc.select(
-        F.col("vec_id").alias("neighbor_id"), F.posexplode("codes").alias("sub", "code_id")
-    )
-    scored = (
-        ecx.join(F.broadcast(lut), ["sub", "code_id"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("d2"), 6).alias("dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc(F.round(F.col("dist"), 6)), F.asc("neighbor_id")
-    )
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w).cast("integer"))
-        .where(F.col("rank") <= shortlist)
-        .select("query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank")
-    )
+        C = np.asarray([list(c) for c in codes], dtype=np.int64)
+        out = []
+        for j, s in enumerate(subs):
+            # bounds-check BEFORE the fancy-index gather: an out-of-range
+            # id would raise a raw numpy IndexError (and a negative id
+            # would wrap to a valid position) instead of this error
+            cj, pm = C[:, j], id_pos[s]
+            pos = pm[cj] if ((cj >= 0) & (cj < len(pm))).all() else None
+            if pos is None or (pos < 0).any():
+                raise ValueError(f"codes contain a code_id absent from the sub={s} codebook")
+            out.append(pos)
+        return out
+
+    def scorer(qvecs):
+        Q, _ = _stack_rows(qvecs, dim=dim)
+        lut = _pq_lut(Q, cb, d)
+
+        def block(pdf):
+            if from_codes:
+                # pre-encoded scan: LUT gather by code id — no float
+                # vector math, the raw corpus is never read
+                pos = gather_positions(pdf["codes"])
+            else:
+                X, _ = _stack_rows(pdf["_v"].to_numpy(), dim=dim)
+                pos = [np.argmin(d2, axis=1) for d2 in _pq_lut(X, cb, d).values()]
+            dist = np.zeros((len(Q), len(pdf)))
+            for s, p in zip(subs, pos):
+                dist += lut[s][:, p]
+            return {"adc": np.round(dist, 6)}
+
+        return block
+
+    return _scan_topk(corpus, queries, scorer, col="dist", desc=False, k=k)
+
+
+def _adc_ranked(
+    scored: DataFrame,
+    embeddings: DataFrame | None,
+    queries: DataFrame,
+    *,
+    k: int,
+    rerank: int | None,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(query_id, neighbor_id, dist, rank) — the PQ-family tail: rank
+    the (query_id, neighbor_id, dist) ADC scores to the top-k, or to a
+    top-``rerank`` shortlist that :func:`_pq_exact_rerank` re-ranks to
+    k by exact squared L2 (which needs the raw ``embeddings``)."""
+    ranked = _rank_topk(scored, "dist", k if rerank is None else rerank)
     if rerank is None:
         return ranked
+    if embeddings is None:
+        raise ValueError("rerank requires the raw embeddings frame")
     return _pq_exact_rerank(
         ranked, embeddings, queries, id_col=id_col, vec_col=vec_col, k=k
     )
@@ -1525,14 +1486,7 @@ def _pq_exact_rerank(
     scored = craw.join(F.broadcast(cand), "neighbor_id").select(
         "query_id", "neighbor_id", F.round(d2, 6).alias("dist")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc(F.round(F.col("dist"), 6)), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("integer"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank")
-    )
+    return _rank_topk(scored, "dist", k)
 
 
 def pq_search_codes(
@@ -1555,97 +1509,18 @@ def pq_search_codes(
     the raw vectors never load, which at 100 TB is the entire point of
     having encoded them.  ``rerank=R`` needs the raw ``embeddings``
     frame for the exact second stage (a q x R candidate broadcast, not
-    a corpus scan).
+    a corpus scan).  ``pq_topk(codes=...)`` serves through this same
+    scan; a NULL or wrong-length code row, or a code_id absent from the
+    codebooks, raises ValueError rather than scoring a wrong distance.
     """
     if dim % m:
         raise ValueError(f"m={m} must divide dim={dim}")  # see pq_topk
-    import numpy as np
-
-    from collections.abc import Iterator
-
-    spark = codes.sparkSession
-    d = dim // m
-    cb = _collect_codebooks(codebooks)
-    subs = sorted(cb)
-    qv = as_double_array(F.col("embedding"))
-    qrows = queries.select("query_id", qv.alias("_v")).collect()
-    qid_type = queries.select("query_id").schema["query_id"].dataType.simpleString()
-    nid_type = codes.select("vec_id").schema["vec_id"].dataType.simpleString()
-    out_schema = f"query_id {qid_type}, neighbor_id {nid_type}, dist double"
-    if not qrows:
-        return spark.createDataFrame([], out_schema + ", rank int")
-    q_ids = [r["query_id"] for r in qrows]
-    Q, _ = _stack_rows([r["_v"] for r in qrows], dim=dim)
-    lut = {}
-    for s in subs:
-        M, ids = cb[s]
-        sl = Q[:, s * d : (s + 1) * d]
-        diff = sl[:, None, :] - M[None, :, :]
-        lut[s] = (np.round((diff * diff).sum(axis=2), 6), ids)
-    shortlist = k if rerank is None else rerank
-    take = shortlist + 16
-    src = _fan_out(
-        codes.where(F.col("vec_id").isNotNull()).select(
-            F.col("vec_id").alias("neighbor_id"), "codes"
-        )
-    )  # NULL-id parity: see _knn_kernel_topk
-
-    def kernel(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.stack(
-                [
-                    np.asarray(c, dtype=np.int64)
-                    if c is not None and len(c) == len(subs)
-                    else np.zeros(len(subs), dtype=np.int64)
-                    for c in pdf["codes"].to_numpy()
-                ]
-            )
-            nbr = pdf["neighbor_id"].to_numpy()
-            dist = np.zeros((len(q_ids), len(pdf)))
-            for j, s in enumerate(subs):
-                table, ids = lut[s]
-                pos = np.searchsorted(ids, C[:, j])
-                pos = np.clip(pos, 0, len(ids) - 1)
-                dist += table[:, pos]
-            dr = np.round(dist, 6)
-            out_q, out_n, out_d = [], [], []
-            for qi, qid in enumerate(q_ids):
-                row = dr[qi]
-                order = sorted(
-                    (j for j in range(len(nbr)) if nbr[j] != qid),
-                    key=lambda j: (row[j], nbr[j]),
-                )[:take]
-                for j in order:
-                    out_q.append(qid)
-                    out_n.append(nbr[j])
-                    out_d.append(row[j])
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_q),
-                    "neighbor_id": pd.Series(out_n, dtype=pdf["neighbor_id"].dtype),
-                    "dist": pd.Series(out_d, dtype="float64"),
-                }
-            )
-
-    cand = src.mapInPandas(kernel, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc(F.round(F.col("dist"), 6)), F.asc("neighbor_id")
+    corpus = codes.select(F.col("vec_id").alias("neighbor_id"), "codes")
+    scored = _adc_scan(
+        corpus, queries, codebooks, m=m, dim=dim, k=k if rerank is None else rerank
     )
-    ranked = (
-        cand.withColumn("rank", F.row_number().over(w).cast("integer"))
-        .where(F.col("rank") <= shortlist)
-        .select("query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank")
-    )
-    if rerank is None:
-        return ranked
-    if embeddings is None:
-        raise ValueError("rerank requires the raw embeddings frame")
-    return _pq_exact_rerank(
-        ranked, embeddings, queries, id_col=id_col, vec_col=vec_col, k=k
+    return _adc_ranked(
+        scored, embeddings, queries, k=k, rerank=rerank, id_col=id_col, vec_col=vec_col
     )
 
 
@@ -1814,48 +1689,17 @@ def ivfpq_topk(
         codebooks = pq_codebooks(
             embeddings, id_col=id_col, vec_col=vec_col, m=m, dim=dim, n_codes=n_codes
         )
-    d = dim // m
     assigned = assign_centroids(embeddings, centroids, id_col=id_col, vec_col=vec_col)
-    qv = as_double_array(F.col("embedding"))
-    q = queries.select("query_id", qv.alias("qv"), l2_norm(qv).alias("qn"))
-    ccv = as_double_array(F.col("embedding"))
-    c = centroids.select("centroid_id", ccv.alias("cv"), l2_norm(ccv).alias("cn"))
-    q_probe = _with_cos_hoisted(F.broadcast(q).crossJoin(F.broadcast(c)))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cos"), 6)), F.asc("centroid_id")
-    )
-    probed = (
-        q_probe.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("query_id", "centroid_id")
-    )
+    probed = _probe_centroids(queries, centroids, nprobe)
     cand = probed.join(
         assigned.select(F.col("vec_id").alias("neighbor_id"), "centroid_id"),
         "centroid_id",
     ).select("query_id", "neighbor_id")
     # ADC over candidates only: LUT broadcast, encoded corpus exploded
     enc = pq_encode(embeddings, codebooks, id_col=id_col, vec_col=vec_col, m=m, dim=dim)
-    slices = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("int").alias("sub"), F.slice("_v", s * d + 1, d).alias("sv")
-            )
-            for s in range(m)
-        ]
-    )
-    qx = queries.select("query_id", qv.alias("_v")).select(
-        "query_id", F.explode(slices).alias("sc")
-    ).select("query_id", F.col("sc.sub").alias("sub"), F.col("sc.sv").alias("sv"))
-    lut_d2 = F.round(
-        F.aggregate(
-            F.zip_with("sv", "codeword", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    lut = qx.join(F.broadcast(codebooks), "sub").select(
-        "query_id", "sub", "code_id", lut_d2.alias("d2")
+    lut = _pq_expr_lut(
+        queries.select("query_id", as_double_array(F.col("embedding")).alias("_v")),
+        codebooks, m=m, d=dim // m, keys=("query_id",),
     )
     ecx = enc.select(
         F.col("vec_id").alias("neighbor_id"), F.posexplode("codes").alias("sub", "code_id")
@@ -1868,19 +1712,8 @@ def ivfpq_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum("d2"), 6).alias("dist"))
     )
-    shortlist = k if rerank is None else rerank
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc(F.round(F.col("dist"), 6)), F.asc("neighbor_id")
-    )
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w).cast("integer"))
-        .where(F.col("rank") <= shortlist)
-        .select("query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank")
-    )
-    if rerank is None:
-        return ranked
-    return _pq_exact_rerank(
-        ranked, embeddings, queries, id_col=id_col, vec_col=vec_col, k=k
+    return _adc_ranked(
+        scored, embeddings, queries, k=k, rerank=rerank, id_col=id_col, vec_col=vec_col
     )
 
 
@@ -1992,59 +1825,18 @@ def _ivfpq_residual_serve(
     corpus ``enc`` (vec_id, centroid_id, codes).  Touches only the
     code column of the corpus — raw vectors appear solely in the
     optional exact-rerank second stage."""
-    d = dim // m
     # vec_col is the CORPUS column only (see ivfpq_residual_topk);
     # centroids/queries carry the fixed 'embedding' contract
     cent = centroids.select(
         "centroid_id", as_double_array(F.col("embedding")).alias("cv")
     )
-    # probe: same cosine coarse ranking as ivfpq_topk / assign_centroids
-    qv = as_double_array(F.col("embedding"))
-    q = queries.select("query_id", qv.alias("qv"), l2_norm(qv).alias("qn"))
-    c_n = centroids.select(
-        "centroid_id", as_double_array(F.col("embedding")).alias("cv"),
-        l2_norm(as_double_array(F.col("embedding"))).alias("cn"),
-    )
-    q_probe = _with_cos_hoisted(F.broadcast(q).crossJoin(F.broadcast(c_n)))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cos"), 6)), F.asc("centroid_id")
-    )
-    probed = (
-        q_probe.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("query_id", "centroid_id")
-    )
-
+    probed = _probe_centroids(queries, centroids, nprobe)
     # per-(query, probed centroid) residual LUT
-    qres = (
-        probed.join(F.broadcast(queries.select("query_id", qv.alias("qv2"))), "query_id")
-        .join(F.broadcast(cent), "centroid_id")
-        .select(
-            "query_id", "centroid_id",
-            F.zip_with("qv2", "cv", lambda a, b: a - b).alias("_v"),
-        )
+    qres = probed.join(F.broadcast(cent), "centroid_id").select(
+        "query_id", "centroid_id", F.zip_with("qv", "cv", lambda a, b: a - b).alias("_v")
     )
-    slices = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("int").alias("sub"), F.slice("_v", s * d + 1, d).alias("sv")
-            )
-            for s in range(m)
-        ]
-    )
-    qx = qres.select("query_id", "centroid_id", F.explode(slices).alias("sc")).select(
-        "query_id", "centroid_id", F.col("sc.sub").alias("sub"), F.col("sc.sv").alias("sv")
-    )
-    lut_d2 = F.round(
-        F.aggregate(
-            F.zip_with("sv", "codeword", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    lut = qx.join(F.broadcast(codebooks), "sub").select(
-        "query_id", "centroid_id", "sub", "code_id", lut_d2.alias("d2")
+    lut = _pq_expr_lut(
+        qres, codebooks, m=m, d=dim // m, keys=("query_id", "centroid_id")
     )
 
     ecx = enc.select(
@@ -2061,21 +1853,8 @@ def _ivfpq_residual_serve(
         .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum("d2"), 6).alias("dist"))
     )
-    shortlist = k if rerank is None else rerank
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc(F.round(F.col("dist"), 6)), F.asc("neighbor_id")
-    )
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w).cast("integer"))
-        .where(F.col("rank") <= shortlist)
-        .select("query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank")
-    )
-    if rerank is None:
-        return ranked
-    if embeddings is None:
-        raise ValueError("rerank requires the raw embeddings frame")
-    return _pq_exact_rerank(
-        ranked, embeddings, queries, id_col=id_col, vec_col=vec_col, k=k
+    return _adc_ranked(
+        scored, embeddings, queries, k=k, rerank=rerank, id_col=id_col, vec_col=vec_col
     )
 
 

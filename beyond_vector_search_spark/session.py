@@ -25,7 +25,8 @@ def get_spark(
     bucketed index tables (CorpusIndex.save_bucketed) survive across
     processes; the default in-memory catalog loses table metadata at
     session exit (the warehouse files remain but are unaddressable)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: one task slot (and shuffle partition) per host core
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
 

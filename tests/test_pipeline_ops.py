@@ -79,7 +79,7 @@ def test_knn_bruteforce_exact(spark):
 
 def test_filtered_knn_topk(spark):
     """Filtered vector search: mode='pre' equals brute-force over the
-    manually filtered corpus on both kernel paths; a cross-table
+    manually filtered corpus; a cross-table
     allowed= set matches its same-table predicate twin; mode='post'
     returns exactly pre's head rows (the surviving global-top-N prefix)
     and under-fills when the filter is selective."""
@@ -91,16 +91,10 @@ def test_filtered_knn_topk(spark):
     manual = sorted(
         map(tuple, sim.knn_bruteforce(emb.where("label = 1"), q, k=5).collect())
     )
-    for kern in (True, False):
-        got = sorted(
-            map(
-                tuple,
-                sim.filtered_knn_topk(
-                    emb, q, predicate="label = 1", k=5, kernel=kern
-                ).collect(),
-            )
-        )
-        assert got == manual
+    got = sorted(
+        map(tuple, sim.filtered_knn_topk(emb, q, predicate="label = 1", k=5).collect())
+    )
+    assert got == manual
 
     # cross-table allowed= (ids from documents) == same-table predicate
     # expressing the same membership

@@ -2298,6 +2298,44 @@ def test_pq_topk_rejects_out_of_range_code_ids(spark):
             ).collect()
 
 
+def test_pq_index_search_rejects_bad_code_rows(spark):
+    """PQIndex.search serves stored codes through the same bounds-checked
+    scan as pq_topk(codes=): a code id absent from the codebook (999 or
+    -1) raises the 'absent from' error instead of scoring a neighbouring
+    codeword's distance, and a NULL or wrong-length code row raises
+    instead of being scored as all-zero codes."""
+    import numpy as np
+    import pytest
+
+    from beyond_vector_search_spark.operators import similarity as sim
+
+    rng = np.random.default_rng(78)
+    dim, n = 8, 12
+    X = rng.standard_normal((n, dim))
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in X[i]]) for i in range(n)],
+        "vec_id LONG, embedding ARRAY<DOUBLE>",
+    )
+    q = spark.createDataFrame(
+        [(900, [float(x) for x in X[0]])], "query_id LONG, embedding ARRAY<DOUBLE>"
+    )
+    good = sim.PQIndex.build(emb, m=2, dim=dim, n_codes=4)
+    assert good.search(q, k=3).count() == 3
+
+    def index_with(rows):
+        codes = spark.createDataFrame(rows, "vec_id LONG, codes ARRAY<INT>")
+        return sim.PQIndex(good.codebooks, codes, m=2, dim=dim)
+
+    for bad in (999, -1):
+        idx = index_with([(i, [bad, 0]) for i in range(n)])
+        with pytest.raises(Exception, match="absent from"):
+            idx.search(q, k=3).collect()
+    for row in (None, [0], [0, 0, 0]):
+        idx = index_with([(0, row)] + [(i, [0, 0]) for i in range(1, n)])
+        with pytest.raises(Exception, match="NULL row or a row without exactly 2"):
+            idx.search(q, k=3).collect()
+
+
 def test_streaming_graph_ingest_extends_knn_store(spark, tmp_path):
     """Streaming ANN-GRAPH maintenance: a file-source embedding stream
     drains through foreachBatch -> KnnGraphIndex.append; the resulting
