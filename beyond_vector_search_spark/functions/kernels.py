@@ -1,20 +1,36 @@
-"""Arrow-batched index-build kernels (``mapInPandas``).
+"""The one per-document Arrow text pass (``mapInPandas``) and the
+Python tokenizer every such pass calls.
 
-The expression-path index build (corpus_index.doc_grams + explode +
-groupBy) is semantically exact but pays for Spark's interpreted
-evaluation of higher-order functions: ``transform(sequence(...), i ->
-substring(s, i, n))`` walks a per-element expression tree, so shingling
-is ~2 us per gram instead of the ~20 ns a tight loop needs.  Measured at
-sf0.1 (5k docs, 1.5M grams): explode-path gram_tf 6.4 s (even with the
-intermediate caches), this kernel 1.4 s warm.
+Expression paths over document text are semantically exact but pay for
+Spark's interpreted evaluation of higher-order functions:
+``transform(sequence(...), i -> substring(s, i, n))`` walks a
+per-element expression tree, so shingling is ~2 us per gram instead of
+the ~20 ns a tight loop needs.  Measured at sf0.1 (5k docs, 1.5M
+grams): explode-path gram_tf 6.4 s (even with the intermediate caches),
+the Arrow kernel 1.4 s warm.
 
-These kernels are the engine's ONLY Python in an index hot path, and
-they follow the Pandas-UDF rules: Arrow batch transfer, per-batch
-vectorized-ish loops (collections.Counter over slices), no per-row UDF
-calls.  Text featurization is defined ONCE, in the two plain functions
-below, and every Python consumer (these kernels, the dedup / fusion /
-pretrain kernels, the query compiler in operators/retrieval.py) calls
-them — each reproduces the reference semantics exactly:
+:func:`doc_kernel` is the ONLY place a document-text Arrow pass is
+written: the ``(doc_id, _text)`` projection and :func:`fan_out`, the
+per-batch loop, output that keeps the id column's type, one pandas
+dtype per output column and a typed frame for an empty batch.  Each
+operator supplies only its per-document function and its schema.  The
+callers, by family:
+
+- index build: :func:`term_tf_frame`, :func:`gram_tf_frame`
+  (``EngineConfig.index_kernel`` picks them or the expression twin);
+- dedup signatures and shingles (operators/dedup.py): ``shingle_rows``,
+  ``positioned_shingle_rows``, ``minhash_signatures``,
+  ``minhash_shingle_rows``, ``simhash64``, ``doc_signatures``;
+- positional text features (operators/fusion.py): ``phrase_counts``,
+  ``proximity_counts``;
+- pre-training data quality (operators/pretrain.py):
+  ``benchmark_contamination(broadcast_set=True)``, ``repetition_flags``;
+- the Python-UDTF demo (functions/udfs.py): ``top_terms_udtf``.
+
+Text featurization is defined ONCE, in the two plain functions below,
+and every Python consumer (these kernels and the query compiler in
+operators/retrieval.py) calls them — each reproduces the reference
+semantics exactly:
 
 - ``tokens``: re.findall('[A-Za-z0-9]+(?:[-_][A-Za-z0-9]+)*') then
   per-token lower() — reference text.py:8-17 verbatim.
@@ -22,25 +38,26 @@ them — each reproduces the reference semantics exactly:
   (whole string if shorter, none if empty) — reference
   retrievers.py:33-44 verbatim.
 
-The expression path stays as the semantic definition (and the DuckDB
-oracle mirrors it); tests assert the two paths produce identical
-relations.  ``EngineConfig.index_kernel`` picks the path.
+Each kernel keeps its expression path as the semantic definition (the
+DuckDB oracle mirrors it) behind a ``kernel=`` switch; tests assert the
+two paths produce identical relations.
 
 Scale note: mapInPandas is a narrow transformation — each executor
-shingles only its partitions, the (id, term, tf) output is already
-partially aggregated per document, and the downstream groupBys shuffle
-aggregated rows, never raw token streams.  This shape survives 100 TB.
+featurizes only its partitions, the output is already partially
+aggregated per document, and the downstream groupBys shuffle aggregated
+rows, never raw token streams.  This shape survives 100 TB.
 """
 
 from __future__ import annotations
 
 import re
 from collections import Counter
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -87,23 +104,12 @@ def fan_out(src: DataFrame) -> DataFrame:
     partitions and this is a no-op.  File count is the cheap proxy for
     split count (``.rdd.getNumPartitions()`` forces a Python-RDD
     conversion, ~0.3 s of pure plan overhead); non-file sources
-    (createDataFrame, views) fall back to the RDD.
-
-    Session config ``spark.bvs.fanout`` skips the probe for sources
-    whose shape the caller already knows: ``always`` repartitions
-    unconditionally (view-backed small relations — saves the 0.3 s RDD
-    probe), ``never`` passes through (the source is known to be
-    well-partitioned), ``auto`` (default) probes as described."""
+    (createDataFrame, views) fall back to the RDD."""
     if src.isStreaming:
         # micro-batches inherit the source's partitioning; the file /
         # RDD probes below are illegal on a streaming plan
         return src
-    mode = src.sparkSession.conf.get("spark.bvs.fanout", "auto")
     parallelism = src.sparkSession.sparkContext.defaultParallelism
-    if mode == "never":
-        return src
-    if mode == "always":
-        return src.repartition(parallelism)
     try:
         n_parts = len(src.inputFiles()) or None
     except Exception:  # noqa: BLE001
@@ -113,26 +119,62 @@ def fan_out(src: DataFrame) -> DataFrame:
     return src.repartition(parallelism) if n_parts < parallelism else src
 
 
-def _project(docs: DataFrame, id_col: str, text: Column | str) -> tuple[DataFrame, str]:
-    """(doc_id, _text) projection + the output schema preserving the id
-    column's type (testdata uses BIGINT ids, the reference corpus STRING)."""
+# pandas dtype of each output column, by Spark type; anything else
+# (string, array<...>) travels as object
+_PANDAS_DTYPES = {"bigint": "int64", "int": "int32", "double": "float64", "boolean": "bool"}
+
+
+def doc_kernel(
+    docs: DataFrame,
+    make: Callable[[], Callable[[str | None], tuple]],
+    schema: str,
+    *,
+    id_col: str = "doc_id",
+    text: Column | str = "text",
+) -> DataFrame:
+    """(doc_id, <schema columns>) — the one per-document Arrow text pass.
+
+    ``make()`` runs once per partition on the executor (a home for
+    per-partition state: memo caches, numpy constants, a broadcast's
+    ``.value``) and returns ``fn(text)``.  ``fn`` maps one document's
+    text (None for a NULL) to a tuple of per-column sequences, one per
+    ``schema`` column, all the same length; each position is one output
+    row for that document and length 0 emits none.  Column sequences,
+    not row tuples: extending per column keeps this loop as cheap as a
+    hand-written one, where splitting row tuples back into columns
+    costs 1.4-2.6x on the tf kernels.
+
+    The output's ``doc_id`` keeps the type of ``docs[id_col]`` (testdata
+    uses BIGINT ids, the reference corpus STRING); every other column
+    takes the pandas dtype of its ``schema`` type, so an empty batch is
+    a fully typed empty frame."""
     text = F.col(text) if isinstance(text, str) else text
     src = fan_out(docs.select(F.col(id_col).alias("doc_id"), text.alias("_text")))
     id_type = src.schema["doc_id"].dataType.simpleString()
-    return src, id_type
+    fields = StructType.fromDDL(schema).fields
+    names = [f.name for f in fields]
+    dtypes = [_PANDAS_DTYPES.get(f.dataType.simpleString(), "object") for f in fields]
 
+    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
 
-def _emit(pdf, ids: list, keys: list, tfs: list, key_name: str, dls: list | None = None):
-    import pandas as pd
+        fn = make()
+        for pdf in batches:
+            ids: list = []
+            cols: list[list] = [[] for _ in names]
+            for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
+                out = fn(txt)
+                n = len(out[0])
+                if n:
+                    ids += [doc_id] * n
+                    for col, vals in zip(cols, out):
+                        col += vals
+            frame = {"doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype)}
+            for name, dtype, col in zip(names, dtypes, cols):
+                frame[name] = pd.Series(col, dtype=dtype)
+            yield pd.DataFrame(frame)
 
-    out = {
-        "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-        key_name: pd.Series(keys, dtype="object"),
-        "tf": pd.Series(tfs, dtype="int64"),
-    }
-    if dls is not None:
-        out["dl"] = pd.Series(dls, dtype="int64")
-    return pd.DataFrame(out)
+    return src.mapInPandas(kernel, f"doc_id {id_type}, {schema}")
 
 
 def term_tf_frame(docs: DataFrame, *, id_col: str = "doc_id", text: Column | str = "text") -> DataFrame:
@@ -145,25 +187,15 @@ def term_tf_frame(docs: DataFrame, *, id_col: str = "doc_id", text: Column | str
     join (one broadcast build + one stage) from every query plan.  It
     is derivable per document inside this one kernel pass, so it costs
     no extra scan."""
-    src, id_type = _project(docs, id_col, text)
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids: list = []
-            terms: list = []
-            tfs: list = []
-            dls: list = []
-            for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                counts = Counter(tokens(txt))
-                dl = sum(counts.values())
-                for term, tf in counts.items():
-                    ids.append(doc_id)
-                    terms.append(term)
-                    tfs.append(tf)
-                    dls.append(dl)
-            yield _emit(pdf, ids, terms, tfs, "term", dls)
+    def term_tf(txt):
+        toks = tokens(txt)
+        counts = Counter(toks)
+        return counts.keys(), counts.values(), [len(toks)] * len(counts)
 
-    return src.mapInPandas(kernel, f"doc_id {id_type}, term string, tf long, dl long")
+    return doc_kernel(
+        docs, lambda: term_tf, "term string, tf long, dl long", id_col=id_col, text=text
+    )
 
 
 def gram_tf_frame(
@@ -171,18 +203,9 @@ def gram_tf_frame(
 ) -> DataFrame:
     """(doc_id, gram, tf) — per-document char-n-gram frequencies
     (reference retrievers.py:33-44 _char_ngrams, counted)."""
-    src, id_type = _project(docs, id_col, text)
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids: list = []
-            grams: list = []
-            tfs: list = []
-            for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                for gram, tf in Counter(char_grams(txt, n)).items():
-                    ids.append(doc_id)
-                    grams.append(gram)
-                    tfs.append(tf)
-            yield _emit(pdf, ids, grams, tfs, "gram")
+    def gram_tf(txt):
+        counts = Counter(char_grams(txt, n))
+        return counts.keys(), counts.values()
 
-    return src.mapInPandas(kernel, f"doc_id {id_type}, gram string, tf long")
+    return doc_kernel(docs, lambda: gram_tf, "gram string, tf long", id_col=id_col, text=text)

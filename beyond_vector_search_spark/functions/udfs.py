@@ -10,12 +10,9 @@ Python at scale: Arrow-batched, columnar, never row-at-a-time.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
@@ -79,22 +76,19 @@ def zscore_by_group(df: DataFrame, *, group_col: str, value_col: str) -> DataFra
 
 def top_terms_udtf(df: DataFrame, *, text_col: str = "text", n: int = 3) -> DataFrame:
     """Python-kernel table function: one input row -> n output rows
-    (doc_id, term, tf rank within doc).  Implemented with mapInPandas
-    (the UDTF execution shape with Arrow batching; Spark 4's
-    ``@udtf`` decorator runs row-at-a-time, so the batched iterator
-    form is preferred in pipelines)."""
+    (doc_id, term, tf rank within doc).  Runs as the shared Arrow text
+    pass (functions/kernels.doc_kernel — the UDTF execution shape with
+    Arrow batching; Spark 4's ``@udtf`` decorator runs row-at-a-time, so
+    the batched iterator form is preferred in pipelines).  ``doc_id``
+    keeps the input's id type."""
     from collections import Counter
 
-    from beyond_vector_search_spark.functions.kernels import tokens
+    from beyond_vector_search_spark.functions.kernels import doc_kernel, tokens
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                counts = Counter(tokens(text))
-                best = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:n]
-                for rank, (term, tf) in enumerate(best, 1):
-                    out.append((int(doc_id), term, int(tf), rank))
-            yield pd.DataFrame(out, columns=["doc_id", "term", "tf", "rank"])
+    def top_terms(text):
+        best = sorted(Counter(tokens(text)).items(), key=lambda kv: (-kv[1], kv[0]))[:n]
+        return [t for t, _ in best], [tf for _, tf in best], range(1, len(best) + 1)
 
-    return df.mapInPandas(kernel, schema="doc_id BIGINT, term STRING, tf BIGINT, rank INT")
+    return doc_kernel(
+        df, lambda: top_terms, "term STRING, tf BIGINT, rank INT", text=text_col
+    )

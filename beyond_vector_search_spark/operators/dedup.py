@@ -70,30 +70,12 @@ def shingle_rows(
     joins/aggregates, so order is immaterial (set parity pinned by
     test)."""
     if kernel:
-        from collections.abc import Iterator
+        from beyond_vector_search_spark.functions.kernels import doc_kernel, tokens
 
-        from beyond_vector_search_spark.functions.kernels import _project, tokens
+        def shingles(txt):
+            return (_shingle_set(tokens(txt), n),)
 
-        src, id_type = _project(df, id_col, F.col(text_col))
-
-        def k(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            for pdf in batches:
-                ids, shs = [], []
-                for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                    toks = tokens(txt)
-                    for s in _shingle_set(toks, n):
-                        ids.append(doc_id)
-                        shs.append(s)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-                        "sh": pd.Series(shs, dtype="object"),
-                    }
-                )
-
-        return src.mapInPandas(k, f"doc_id {id_type}, sh string")
+        return doc_kernel(df, lambda: shingles, "sh string", id_col=id_col, text=text_col)
     return _doc_shingles(df, id_col=id_col, text_col=text_col, n=n).select(
         "doc_id", F.explode("shingles").alias("sh")
     )
@@ -119,7 +101,7 @@ def exact_dedup_map(
 # One implementation each of the md5 shingle-digest MinHash and the
 # bit-majority SimHash, so the standalone kernels and the fused
 # doc_signatures kernel cannot drift apart.  The memo caches are
-# per-PARTITION (created per kernel invocation) and BOUNDED: corpus
+# per-PARTITION (created in each kernel's make()) and BOUNDED: corpus
 # vocabulary repeats heavily so hit rates are high, but an adversarial
 # partition of unique shingles must not accumulate gigabytes in the
 # Python worker — at the cap the cache resets (correctness unaffected;
@@ -147,9 +129,17 @@ def _make_shingle_digests(num_hashes: int):
     return digests
 
 
-def _make_tok_hash():
+def _make_simhash(bits: int):
+    """Per-doc SimHash fingerprint ``fp(tokset)`` from the DISTINCT-token
+    set — bit-identical to the expression fold (majority vote per bit
+    over the 60-bit md5-derived token hashes, 0 for an empty set).
+    Token hashes are memoized per partition, bounded."""
     import hashlib
 
+    import numpy as np
+
+    shifts = np.arange(bits, dtype=np.uint64)
+    powers = np.uint64(1) << shifts
     cache: dict[str, int] = {}
 
     def tok_hash(t: str) -> int:
@@ -161,7 +151,15 @@ def _make_tok_hash():
             cache[t] = h
         return h
 
-    return tok_hash
+    def fp(tokset: set) -> int:
+        if not tokset:
+            return 0
+        hs = np.fromiter((tok_hash(t) for t in tokset), dtype=np.uint64, count=len(tokset))
+        ones = ((hs[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
+        # sum of (2*bit - 1) > 0  <=>  2*ones > n_tokens
+        return int((powers[2 * ones > len(tokset)]).sum())
+
+    return fp
 
 
 def _shingle_set(toks: list, n: int) -> set:
@@ -187,61 +185,9 @@ def _minhash_sig(toks: list, shingle_n: int, num_hashes: int, digests) -> list:
     return _sig_from_shingles(_shingle_set(toks, shingle_n), num_hashes, digests)
 
 
-def _simhash_fp(tokset: set, shifts, powers, tok_hash) -> int:
-    """Per-doc SimHash fingerprint from the DISTINCT-token set —
-    bit-identical to the expression fold (majority vote per bit)."""
-    import numpy as np
-
-    if not tokset:
-        return 0
-    hs = np.fromiter((tok_hash(t) for t in tokset), dtype=np.uint64, count=len(tokset))
-    ones = ((hs[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
-    # sum of (2*bit - 1) > 0  <=>  2*ones > n_tokens
-    return int((powers[2 * ones > len(tokset)]).sum())
-
-
 def _check_simhash_bits(bits: int) -> None:
     if not 1 <= bits <= 63:
         raise ValueError(f"simhash kernel bits must be in [1, 63] (got {bits})")
-
-
-def _minhash_kernel(
-    df: DataFrame, *, id_col: str, text_col: str, num_hashes: int, shingle_n: int
-) -> DataFrame:
-    """Arrow-batched MinHash: tokenize + word-shingle + per-hash min of
-    ``md5(f"{i}:{shingle}")`` hex digests in one narrow pass, BYTE-
-    identical to the expression path (same strings hashed, same
-    lexicographic min).  Shingle digests are memoized per partition
-    with a bounded cache (:func:`_make_shingle_digests`) — the corpus
-    shingle vocabulary repeats heavily, so each unique shingle pays its
-    ``num_hashes`` md5 calls once.  The expression form costs
-    num_hashes x shingles interpreted md5/concat expression steps per
-    document — the dominant cost of lsh_candidate_pairs at every
-    SCALING.jsonl probe point (same finding as the SimHash kernel)."""
-    from collections.abc import Iterator
-
-    from beyond_vector_search_spark.functions.kernels import _project, tokens
-
-    src, id_type = _project(df, id_col, F.col(text_col))
-
-    def kernel(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        digests = _make_shingle_digests(num_hashes)
-        for pdf in batches:
-            ids, sigs = [], []
-            for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                toks = tokens(txt)
-                ids.append(doc_id)
-                sigs.append(_minhash_sig(toks, shingle_n, num_hashes, digests))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-                    "sig": pd.Series(sigs, dtype="object"),
-                }
-            )
-
-    return src.mapInPandas(kernel, f"doc_id {id_type}, sig array<string>")
 
 
 def minhash_signatures(
@@ -255,14 +201,27 @@ def minhash_signatures(
 ) -> DataFrame:
     """(doc_id, sig array<string>) — per-row MinHash over word shingles.
 
-    ``kernel=True`` (default) computes identical signatures in an Arrow
-    kernel (:func:`_minhash_kernel`); ``kernel=False`` is the
+    ``kernel=True`` (default) computes identical signatures in one
+    Arrow pass: tokenize + word-shingle + per-hash min of
+    ``md5(f"{i}:{shingle}")`` hex digests, BYTE-identical to the
+    expression path (same strings hashed, same lexicographic min).
+    Shingle digests are memoized per partition with a bounded cache
+    (:func:`_make_shingle_digests`) — the corpus shingle vocabulary
+    repeats heavily, so each unique shingle pays its ``num_hashes`` md5
+    calls once.  The expression form costs num_hashes x shingles
+    interpreted md5/concat expression steps per document — the dominant
+    cost of lsh_candidate_pairs at every SCALING.jsonl probe point (same
+    finding as the SimHash kernel).  ``kernel=False`` is the
     pure-expression semantic definition the DuckDB mirror reproduces.
     Tests pin the two byte-identical."""
     if kernel:
-        return _minhash_kernel(
-            df, id_col=id_col, text_col=text_col, num_hashes=num_hashes, shingle_n=shingle_n
-        )
+        from beyond_vector_search_spark.functions.kernels import doc_kernel, tokens
+
+        def make():
+            digests = _make_shingle_digests(num_hashes)
+            return lambda txt: ([_minhash_sig(tokens(txt), shingle_n, num_hashes, digests)],)
+
+        return doc_kernel(df, make, "sig array<string>", id_col=id_col, text=text_col)
     sh = _doc_shingles(df, id_col=id_col, text_col=text_col, n=shingle_n)
     return sh.select("doc_id", minhash_signature(F.col("shingles"), num_hashes).alias("sig"))
 
@@ -289,34 +248,19 @@ def minhash_shingle_rows(
     is byte-identical to :func:`minhash_signatures`; ``shingles``
     (sorted for a deterministic materialized relation) explodes to
     exactly :func:`shingle_rows` — both pinned by test."""
-    from collections.abc import Iterator
+    from beyond_vector_search_spark.functions.kernels import doc_kernel, tokens
 
-    from beyond_vector_search_spark.functions.kernels import _project, tokens
-
-    src, id_type = _project(df, id_col, F.col(text_col))
-
-    def kernel(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def make():
         digests = _make_shingle_digests(num_hashes)
-        for pdf in batches:
-            ids, sigs, shs = [], [], []
-            for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                toks = tokens(txt)
-                shingles = _shingle_set(toks, shingle_n)
-                ids.append(doc_id)
-                sigs.append(_sig_from_shingles(shingles, num_hashes, digests))
-                shs.append(sorted(shingles))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-                    "sig": pd.Series(sigs, dtype="object"),
-                    "shingles": pd.Series(shs, dtype="object"),
-                }
-            )
 
-    return src.mapInPandas(
-        kernel, f"doc_id {id_type}, sig array<string>, shingles array<string>"
+        def sig_shingles(txt):
+            shingles = _shingle_set(tokens(txt), shingle_n)
+            return [_sig_from_shingles(shingles, num_hashes, digests)], [sorted(shingles)]
+
+        return sig_shingles
+
+    return doc_kernel(
+        df, make, "sig array<string>, shingles array<string>", id_col=id_col, text=text_col
     )
 
 
@@ -337,7 +281,7 @@ def doc_signatures(
     byte/bit-identical to its standalone operator
     (:func:`minhash_signatures` / :func:`simhash64`) — pinned by test,
     and built from the SAME per-document primitives (:func:`_minhash_sig`
-    / :func:`_simhash_fp`), so the three kernels cannot drift apart.
+    / :func:`_make_simhash`), so the three kernels cannot drift apart.
 
     ``fingerprint=True`` additionally emits
     :func:`text_analysis.doc_fingerprint`'s column (md5 of the sorted
@@ -346,49 +290,33 @@ def doc_signatures(
     here, so the fused column costs one md5 per doc where the join form
     costs a SECOND full text scan plus a corpus-wide join.
     """
-    from collections.abc import Iterator
-
-    from beyond_vector_search_spark.functions.kernels import _project, tokens
+    from beyond_vector_search_spark.functions.kernels import doc_kernel, tokens
 
     _check_simhash_bits(bits)
-    src, id_type = _project(df, id_col, F.col(text_col))
 
-    def kernel(batches: Iterator) -> Iterator:
+    def make():
         import hashlib
 
-        import numpy as np
-        import pandas as pd
-
-        shifts = np.arange(bits, dtype=np.uint64)
-        powers = np.uint64(1) << shifts
         digests = _make_shingle_digests(num_hashes)
-        tok_hash = _make_tok_hash()
+        simhash = _make_simhash(bits)
 
-        for pdf in batches:
-            ids, sigs, fps, prints = [], [], [], []
-            for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                toks = tokens(txt)
-                tokset = set(toks)
-                ids.append(doc_id)
-                sigs.append(_minhash_sig(toks, shingle_n, num_hashes, digests))
-                fps.append(_simhash_fp(tokset, shifts, powers, tok_hash))
-                if fingerprint:
-                    prints.append(
-                        hashlib.md5(" ".join(sorted(tokset)).encode("utf-8")).hexdigest()
-                    )
-            out = {
-                "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-                "sig": pd.Series(sigs, dtype="object"),
-                "simhash": pd.Series(fps, dtype="int64"),
-            }
+        def signatures(txt):
+            toks = tokens(txt)
+            tokset = set(toks)
+            out = (
+                [_minhash_sig(toks, shingle_n, num_hashes, digests)],
+                [simhash(tokset)],
+            )
             if fingerprint:
-                out["fingerprint"] = pd.Series(prints, dtype="object")
-            yield pd.DataFrame(out)
+                out += ([hashlib.md5(" ".join(sorted(tokset)).encode("utf-8")).hexdigest()],)
+            return out
 
-    schema = f"doc_id {id_type}, sig array<string>, simhash long"
+        return signatures
+
+    schema = "sig array<string>, simhash long"
     if fingerprint:
         schema += ", fingerprint string"
-    return src.mapInPandas(kernel, schema)
+    return doc_kernel(df, make, schema, id_col=id_col, text=text_col)
 
 
 def banded_keys(
@@ -700,32 +628,16 @@ def positioned_shingle_rows(
     (posexplode over the shingle sequence) — set-parity pinned by test.
     """
     if kernel:
-        from collections.abc import Iterator
+        from beyond_vector_search_spark.functions.kernels import doc_kernel, tokens
 
-        from beyond_vector_search_spark.functions.kernels import _project, tokens
+        def positioned(txt):
+            toks = tokens(txt)
+            starts = range(len(toks) - n + 1)
+            return range(1, len(starts) + 1), [" ".join(toks[i : i + n]) for i in starts]
 
-        src, id_type = _project(df, id_col, F.col(text_col))
-
-        def k(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            for pdf in batches:
-                ids, poss, shs = [], [], []
-                for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                    toks = tokens(txt)
-                    for i in range(len(toks) - n + 1):
-                        ids.append(doc_id)
-                        poss.append(i + 1)
-                        shs.append(" ".join(toks[i : i + n]))
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-                        "pos": pd.Series(poss, dtype="int64"),
-                        "sh": pd.Series(shs, dtype="object"),
-                    }
-                )
-
-        return src.mapInPandas(k, f"doc_id {id_type}, pos long, sh string")
+        return doc_kernel(
+            df, lambda: positioned, "pos long, sh string", id_col=id_col, text=text_col
+        )
     toked = df.select(F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("toks"))
     grams = toked.select(
         "doc_id",
@@ -823,51 +735,6 @@ def duplicate_spans(
     )
 
 
-def _simhash_kernel(
-    df: DataFrame, *, id_col: str, text_col: str, bits: int
-) -> DataFrame:
-    """Arrow-batched SimHash: tokenize + md5-hash + bit-majority vote in
-    numpy, one narrow pass (``mapInPandas``), bit-identical to the
-    expression path (integer vote, same 60-bit md5-derived token hash).
-
-    The expression form evaluates ``bits x tokens`` interpreted lambda
-    steps per document (~3 ms/doc at bits=60 — measured: 15.6 s for 5k
-    docs, the dominant cost of simhash_pairs at every SCALING.jsonl
-    probe point); this kernel is the same Pandas-UDF escape hatch the
-    index build uses (functions/kernels.py), ~20x faster.  Token hashes
-    are memoized per partition, bounded (:func:`_make_tok_hash`).
-    """
-    from collections.abc import Iterator
-
-    from beyond_vector_search_spark.functions.kernels import _project, tokens
-
-    _check_simhash_bits(bits)
-    src, id_type = _project(df, id_col, F.col(text_col))
-
-    def kernel(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        shifts = np.arange(bits, dtype=np.uint64)
-        powers = np.uint64(1) << shifts
-        tok_hash = _make_tok_hash()
-
-        for pdf in batches:
-            ids, fps = [], []
-            for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                tokset = set(tokens(txt))
-                ids.append(doc_id)
-                fps.append(_simhash_fp(tokset, shifts, powers, tok_hash))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-                    "simhash": pd.Series(fps, dtype="int64"),
-                }
-            )
-
-    return src.mapInPandas(kernel, f"doc_id {id_type}, simhash long")
-
-
 def simhash64(
     df: DataFrame,
     *,
@@ -883,19 +750,31 @@ def simhash64(
     (2*bit_j(h)-1) is positive.  32 bits keeps the per-row work
     (tokens × bits) cheap while remaining a real near-dup fingerprint.
 
-    ``kernel=True`` (default) computes the identical fingerprints in an
-    Arrow numpy kernel (:func:`_simhash_kernel` — the interpreted
-    bits×tokens lambda fold is the dominant cost of simhash_pairs);
-    ``kernel=False`` is the pure-expression semantic definition, which
-    the DuckDB mirror reproduces (same md5 hash, same bit fold).  Tests
-    pin the two bit-identical.
+    ``kernel=True`` (default) computes the identical fingerprints in one
+    Arrow pass: tokenize + md5-hash + bit-majority vote in numpy
+    (integer vote, same 60-bit md5-derived token hash).  The expression
+    form evaluates ``bits x tokens`` interpreted lambda steps per
+    document (~3 ms/doc at bits=60 — measured: 15.6 s for 5k docs, the
+    dominant cost of simhash_pairs at every SCALING.jsonl probe point);
+    the kernel is the same Pandas-UDF escape hatch the index build uses
+    (functions/kernels.py), ~20x faster.  Token hashes are memoized per
+    partition, bounded (:func:`_make_simhash`).  ``kernel=False`` is
+    the pure-expression semantic definition, which the DuckDB mirror
+    reproduces (same md5 hash, same bit fold).  Tests pin the two
+    bit-identical.
     """
     # same validation as doc_signatures — an out-of-range bits must
     # raise, never silently fall back to the ~20x-slower expression
     # fold (or, for bits<1, die later in an opaque sequence() error)
     _check_simhash_bits(bits)
     if kernel:
-        return _simhash_kernel(df, id_col=id_col, text_col=text_col, bits=bits)
+        from beyond_vector_search_spark.functions.kernels import doc_kernel, tokens
+
+        def make():
+            simhash = _make_simhash(bits)
+            return lambda txt: ([simhash(set(tokens(txt)))],)
+
+        return doc_kernel(df, make, "simhash long", id_col=id_col, text=text_col)
     hashed = df.select(
         F.col(id_col).alias("doc_id"),
         F.transform(F.array_distinct(tokenize(F.col(text_col))), lambda t: hash64(t)).alias("hs"),

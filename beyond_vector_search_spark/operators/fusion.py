@@ -274,7 +274,7 @@ def phrase_counts(
     inverted index instead (dedup.positioned_shingle_rows) and join on
     the first term.
     """
-    from beyond_vector_search_spark.functions.kernels import _project, tokens
+    from beyond_vector_search_spark.functions.kernels import doc_kernel, tokens
     from beyond_vector_search_spark.functions.text import tokenize
 
     ptoks_by_phrase = [(phrase, tokens(phrase)) for phrase in phrases]
@@ -283,36 +283,21 @@ def phrase_counts(
         raise ValueError("no non-empty phrases given")
 
     if kernel:
-        from collections.abc import Iterator
+        def counts(txt):
+            toks = tokens(txt)
+            n = len(toks)
+            phs, tfs = [], []
+            for phrase, pt in ptoks_by_phrase:
+                m = len(pt)
+                c = sum(1 for i in range(n - m + 1) if toks[i : i + m] == pt)
+                if c:
+                    phs.append(phrase)
+                    tfs.append(c)
+            return phs, tfs
 
-        src, id_type = _project(docs, id_col, F.col(text_col))
-
-        def k(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            for pdf in batches:
-                ids, phs, tfs = [], [], []
-                for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                    toks = tokens(txt)
-                    n = len(toks)
-                    for phrase, pt in ptoks_by_phrase:
-                        m = len(pt)
-                        if n < m:
-                            continue
-                        c = sum(1 for i in range(n - m + 1) if toks[i : i + m] == pt)
-                        if c:
-                            ids.append(doc_id)
-                            phs.append(phrase)
-                            tfs.append(c)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-                        "phrase": pd.Series(phs, dtype="object"),
-                        "phrase_tf": pd.Series(tfs, dtype="int64"),
-                    }
-                )
-
-        return src.mapInPandas(k, f"doc_id {id_type}, phrase string, phrase_tf long")
+        return doc_kernel(
+            docs, lambda: counts, "phrase string, phrase_tf long", id_col=id_col, text=text_col
+        )
 
     toked = docs.select(
         F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("toks")
@@ -383,50 +368,36 @@ def proximity_counts(
     from beyond_vector_search_spark.functions.text import tokenize
 
     if kernel:
-        from collections.abc import Iterator
-
-        from beyond_vector_search_spark.functions.kernels import _project, tokens
+        from beyond_vector_search_spark.functions.kernels import doc_kernel, tokens
 
         pairs = [(a, b, a.lower(), b.lower()) for a, b in term_pairs]
         if not pairs:
             raise ValueError("no term pairs given")
-        src, id_type = _project(docs, id_col, F.col(text_col))
 
-        def k(batches: Iterator) -> Iterator:
-            import pandas as pd
+        def proximity(txt):
+            toks = tokens(txt)
+            tas, tbs, mds, nws = [], [], [], []
+            for a, b, al, bl in pairs:
+                pa = [i for i, t in enumerate(toks) if t == al]
+                pb = [i for i, t in enumerate(toks) if t == bl]
+                if max_positions is not None:
+                    pa = pa[:max_positions]
+                    pb = pb[:max_positions]
+                if not pa or not pb:
+                    continue
+                dists = [abs(x - y) for x in pa for y in pb]
+                tas.append(a)
+                tbs.append(b)
+                mds.append(min(dists))
+                nws.append(sum(1 for d in dists if d <= window))
+            return tas, tbs, mds, nws
 
-            for pdf in batches:
-                ids, tas, tbs, mds, nws = [], [], [], [], []
-                for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                    toks = tokens(txt)
-                    for a, b, al, bl in pairs:
-                        pa = [i for i, t in enumerate(toks) if t == al]
-                        pb = [i for i, t in enumerate(toks) if t == bl]
-                        if max_positions is not None:
-                            pa = pa[:max_positions]
-                            pb = pb[:max_positions]
-                        if not pa or not pb:
-                            continue
-                        dists = [abs(x - y) for x in pa for y in pb]
-                        ids.append(doc_id)
-                        tas.append(a)
-                        tbs.append(b)
-                        mds.append(min(dists))
-                        nws.append(sum(1 for d in dists if d <= window))
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-                        "term_a": pd.Series(tas, dtype="object"),
-                        "term_b": pd.Series(tbs, dtype="object"),
-                        "min_dist": pd.Series(mds, dtype="int64"),
-                        "n_within": pd.Series(nws, dtype="int64"),
-                    }
-                )
-
-        return src.mapInPandas(
-            k,
-            f"doc_id {id_type}, term_a string, term_b string, "
-            "min_dist long, n_within long",
+        return doc_kernel(
+            docs,
+            lambda: proximity,
+            "term_a string, term_b string, min_dist long, n_within long",
+            id_col=id_col,
+            text=text_col,
         )
 
     toked = docs.select(

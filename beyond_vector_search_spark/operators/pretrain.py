@@ -107,9 +107,7 @@ def benchmark_contamination(
                 "broadcast_set counts shingles inside the corpus text kernel; "
                 "pass the corpus as text (corpus_shingles=None) or use the join form"
             )
-        from collections.abc import Iterator
-
-        from beyond_vector_search_spark.functions.kernels import _project, tokens
+        from beyond_vector_search_spark.functions.kernels import doc_kernel, tokens
         from beyond_vector_search_spark.operators.dedup import _shingle_set
 
         if bench_shingles is not None:
@@ -125,28 +123,17 @@ def benchmark_contamination(
                 bench_set |= _shingle_set(toks, n)
             bench_set = frozenset(bench_set)
         bc = corpus.sparkSession.sparkContext.broadcast(bench_set)
-        src, id_type = _project(corpus, id_col, F.col(text_col))
 
-        def kernel(batches: Iterator) -> Iterator:
-            import pandas as pd
-
+        def make():
             bset = bc.value
-            for pdf in batches:
-                ids, ns = [], []
-                for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                    toks = tokens(txt)
-                    c = len(_shingle_set(toks, n) & bset)
-                    if c:
-                        ids.append(doc_id)
-                        ns.append(c)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-                        "n_shared": pd.Series(ns, dtype="int64"),
-                    }
-                )
 
-        return src.mapInPandas(kernel, f"doc_id {id_type}, n_shared long")
+            def shared(txt):
+                c = len(_shingle_set(tokens(txt), n) & bset)
+                return ([c],) if c else ((),)
+
+            return shared
+
+        return doc_kernel(corpus, make, "n_shared long", id_col=id_col, text=text_col)
     bench_sh = (
         bench_shingles if bench_shingles is not None else shingles(benchmark)
     ).select("sh").distinct()
@@ -310,50 +297,32 @@ def _repetition_stats_kernel(
     non-distinct ``' '``-joined adjacent pairs of _bigram_array).
     Token-less documents emit nothing — exactly the rows the explode
     path loses (no (doc, gram) row means no aggregate group)."""
-    from collections.abc import Iterator
+    from collections import Counter
 
-    from beyond_vector_search_spark.functions.kernels import _project, tokens
+    from beyond_vector_search_spark.functions.kernels import doc_kernel, tokens
 
-    src, id_type = _project(df, id_col, F.col(text_col))
+    def stats(txt):
+        toks = tokens(txt)
+        n = len(toks)
+        if n == 0:
+            return ((),)
+        wc = Counter(toks)
+        bc = Counter(toks[i] + " " + toks[i + 1] for i in range(n - 1))
+        return (
+            [n],
+            [len(wc)],
+            [max(wc.values())],
+            [sum(map(len, toks))],
+            [n - 1],
+            [max(bc.values()) if bc else 0],
+        )
 
-    def kernel(batches: Iterator) -> Iterator:
-        from collections import Counter
-
-        import pandas as pd
-
-        for pdf in batches:
-            ids, nt, nd, mt, sl, tb, mb = [], [], [], [], [], [], []
-            for doc_id, txt in zip(pdf["doc_id"], pdf["_text"]):
-                toks = tokens(txt)
-                n = len(toks)
-                if n == 0:
-                    continue
-                wc = Counter(toks)
-                bigs = [toks[i] + " " + toks[i + 1] for i in range(n - 1)]
-                bc = Counter(bigs)
-                ids.append(doc_id)
-                nt.append(n)
-                nd.append(len(wc))
-                mt.append(max(wc.values()))
-                sl.append(sum(map(len, toks)))
-                tb.append(len(bigs))
-                mb.append(max(bc.values()) if bc else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-                    "n_tokens": pd.Series(nt, dtype="int64"),
-                    "n_distinct": pd.Series(nd, dtype="int64"),
-                    "max_tf": pd.Series(mt, dtype="int64"),
-                    "sum_len": pd.Series(sl, dtype="int64"),
-                    "total_bi": pd.Series(tb, dtype="int64"),
-                    "max_bi": pd.Series(mb, dtype="int64"),
-                }
-            )
-
-    return src.mapInPandas(
-        kernel,
-        f"doc_id {id_type}, n_tokens long, n_distinct long, max_tf long, "
-        "sum_len long, total_bi long, max_bi long",
+    return doc_kernel(
+        df,
+        lambda: stats,
+        "n_tokens long, n_distinct long, max_tf long, sum_len long, total_bi long, max_bi long",
+        id_col=id_col,
+        text=text_col,
     )
 
 

@@ -257,15 +257,13 @@ def _scan_topk(
                 if desc:
                     R = -R
                 for qi, qid in enumerate(q_ids):
-                    row_s, row_r = S[qi], R[qi]
-                    order = sorted(
-                        (j for j in range(len(nbr)) if nbr[j] != qid),
-                        key=lambda j: (row_r[j], nbr[j]),
-                    )[:take]
-                    for j in order:
-                        out_q.append(qid)
-                        out_n.append(nbr[j])
-                        out_s.append(row_s[j])
+                    # primary key the rounded score, ties by neighbor id
+                    # (lexsort takes object / string ids too)
+                    order = np.lexsort((nbr, R[qi]))
+                    order = order[nbr[order] != qid][:take]
+                    out_q += [qid] * len(order)
+                    out_n.extend(nbr[order])
+                    out_s.extend(S[qi][order])
                     if tag:
                         out_m += [method] * len(order)
             out = {

@@ -58,3 +58,33 @@ def test_only_serving_arms_compiles_query_batches():
             if name in names:
                 calls.append(f"{path.relative_to(PACKAGE.parent)}:{node.lineno}: {name}")
     assert not calls, "compiled-arm calls outside ServingArms:\n" + "\n".join(calls)
+
+
+def test_document_text_passes_run_through_doc_kernel():
+    """``functions/kernels.doc_kernel`` is the one per-document Arrow
+    text pass: the operator modules that featurize document text make
+    no ``mapInPandas`` call of their own, and no module outside the
+    runner reaches for the old per-kernel ``_project`` / ``_emit``
+    helpers."""
+    kernel_free = [
+        PACKAGE / "operators" / "dedup.py",
+        PACKAGE / "operators" / "fusion.py",
+        PACKAGE / "operators" / "pretrain.py",
+        PACKAGE / "functions" / "udfs.py",
+    ]
+    found = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            name = None
+            if isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.alias):
+                name = node.name
+            where = f"{path.relative_to(PACKAGE.parent)}:{getattr(node, 'lineno', '?')}"
+            if name == "mapInPandas" and path in kernel_free:
+                found.append(f"{where}: mapInPandas")
+            elif name in {"_project", "_emit"}:
+                found.append(f"{where}: {name}")
+    assert not found, "document-text Arrow passes outside doc_kernel:\n" + "\n".join(found)

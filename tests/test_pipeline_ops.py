@@ -1531,6 +1531,26 @@ def test_knn_kernel_edge_inputs(spark):
     assert [r.neighbor_id for r in got] == ["a", "c"]  # zero-norm query -> cos 0.0, id order
     assert all(r.cos == 0.0 for r in got)
 
+    # tie-heavy: 600 rows over three directions, string ids stored out
+    # of id order — each batch holds far more equal rounded cosines
+    # than its local top-(k+16), so the pick must break ties by
+    # neighbor id exactly as the expression path's global window does
+    dirs = [[1.0, 0.0], [0.0, 1.0], [0.6, 0.8]]
+    ties = spark.createDataFrame(
+        [(f"t{599 - i:03d}", dirs[i % 3]) for i in range(600)],
+        "vec_id STRING, embedding ARRAY<DOUBLE>",
+    )
+    tq = ties.where("vec_id IN ('t000', 't001', 't302')").select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+    def rows(df):
+        return sorted((r.query_id, r.neighbor_id, r.cos, r.rank) for r in df.collect())
+
+    got = rows(sim.knn_bruteforce(ties, tq, k=5))
+    assert got == rows(sim.knn_bruteforce(ties, tq, k=5, kernel=False))
+    assert len(got) == 15 and all(r[1] != r[0] for r in got)
+
 
 def test_simhash_kernel_matches_expression(spark):
     """The Arrow SimHash kernel is BIT-identical to the expression

@@ -2,14 +2,17 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from beyond_vector_search_spark.functions import kernels, udfs
 from beyond_vector_search_spark.functions.text import (
     char_ngrams,
     join_top_sentences,
     norm_answer,
     tokenize,
 )
+from beyond_vector_search_spark.operators import dedup, fusion, pretrain
 
 SAMPLES = [
     "Need details on INC-49217 now",
@@ -77,22 +80,70 @@ def test_tokenize_on_corpus(spark, ref_corpus):
 
 
 def test_fan_out_config_modes(spark):
-    """spark.bvs.fanout: 'never' passes through, 'always' repartitions
-    to core count without probing, 'auto' probes (default)."""
+    """fan_out's split-count probe: an input with fewer partitions than
+    defaultParallelism is repartitioned to defaultParallelism; one with
+    enough partitions is returned as is."""
     from beyond_vector_search_spark.functions.kernels import fan_out
 
-    df = spark.createDataFrame([(i, "x") for i in range(10)], "doc_id long, text string")
-    try:
-        spark.conf.set("spark.bvs.fanout", "never")
-        assert fan_out(df) is df
-        spark.conf.set("spark.bvs.fanout", "always")
-        assert (
-            fan_out(df).rdd.getNumPartitions()
-            == spark.sparkContext.defaultParallelism
-        )
-    finally:
-        spark.conf.unset("spark.bvs.fanout")
-    assert fan_out(df).count() == 10  # auto default still works
+    parallelism = spark.sparkContext.defaultParallelism
+    assert parallelism > 1
+    small = spark.createDataFrame(
+        [(i, "x") for i in range(10)], "doc_id long, text string"
+    ).coalesce(1)
+    spread = fan_out(small)
+    assert spread.rdd.getNumPartitions() == parallelism
+    assert spread.count() == 10
+    wide = spark.range(100).repartition(parallelism)
+    assert fan_out(wide) is wide
+
+
+# every operator that runs as kernels.doc_kernel, at its default
+# (kernel) path; benchmark_contamination needs a benchmark relation
+_DOC_KERNEL_OPS = {
+    "term_tf_frame": lambda d, b: kernels.term_tf_frame(d),
+    "gram_tf_frame": lambda d, b: kernels.gram_tf_frame(d),
+    "top_terms_udtf": lambda d, b: udfs.top_terms_udtf(d),
+    "shingle_rows": lambda d, b: dedup.shingle_rows(d),
+    "positioned_shingle_rows": lambda d, b: dedup.positioned_shingle_rows(d, n=3),
+    "minhash_signatures": lambda d, b: dedup.minhash_signatures(d),
+    "minhash_shingle_rows": lambda d, b: dedup.minhash_shingle_rows(d),
+    "doc_signatures": lambda d, b: dedup.doc_signatures(d, fingerprint=True),
+    "simhash64": lambda d, b: dedup.simhash64(d),
+    "phrase_counts": lambda d, b: fusion.phrase_counts(d, ["quick brown"]),
+    "proximity_counts": lambda d, b: fusion.proximity_counts(d, [("quick", "fox")]),
+    "benchmark_contamination": lambda d, b: pretrain.benchmark_contamination(
+        d, b, n=3, broadcast_set=True
+    ),
+    "repetition_flags": lambda d, b: pretrain.repetition_flags(d),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DOC_KERNEL_OPS))
+def test_doc_kernel_operators_edge_inputs(spark, name):
+    """STRING ids, a NULL text and an empty text run through every
+    doc_kernel operator without raising, the output keeps the input's
+    id type, and an empty input yields an empty frame with the full
+    schema."""
+    from pyspark.sql.types import StringType
+
+    docs = spark.createDataFrame(
+        [
+            ("d1", "the quick brown fox jumps over the quick brown dog"),
+            ("d2", None),
+            ("d3", ""),
+            ("d4", "quick brown fox quick brown fox"),
+        ],
+        "doc_id STRING, text STRING",
+    )
+    bench = spark.createDataFrame([("b1", "the quick brown fox")], "doc_id STRING, text STRING")
+    op = _DOC_KERNEL_OPS[name]
+    out = op(docs, bench)
+    assert out.schema["doc_id"].dataType == StringType()
+    rows = out.collect()
+    assert rows and {r.doc_id for r in rows} <= {"d1", "d2", "d3", "d4"}
+    empty = op(docs.limit(0), bench)
+    assert empty.schema == out.schema
+    assert empty.collect() == []
 
 
 def test_encoding_artifacts_hand_computed(spark):
